@@ -121,6 +121,12 @@ object ServeModel {
   def start(spark: SparkSession, sfDir: String, port: Int): HttpServer = {
     val model = loadModel(spark, sfDir)
     val root = RunStoreRoot(sfDir)
+    // TCP_NODELAY on accepted sockets: the response headers and body go
+    // out as separate writes, and Nagle's algorithm would hold the body
+    // until the client's delayed ACK (~40 ms per request). The JDK reads
+    // the property once, in a static initializer, so it must be set
+    // before the first HttpServer of the JVM is created.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
     server.createContext("/health", guarded(ex =>

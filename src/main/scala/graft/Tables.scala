@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish testdata
   * (see /root/repo/TESTDATA.md, FIXTURES.md §2).
@@ -39,26 +40,50 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Load one testdata table with its memoized [[rawSchema]], so a load
+    * launches no Spark job; every call still builds a fresh DataFrame in
+    * the caller's session. events' ts is normalized to TIMESTAMP by
+    * [[normalizeEventTs]]. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val df = spark.read.schema(rawSchema(spark, sfDir, name))
+      .parquet(s"$sfDir/$name.parquet")
+    if (name == "events") normalizeEventTs(df) else df
+  }
 
-  /** events.parquet stores ts as INT64 TIMESTAMP(NANOS), which Spark's
-    * vectorized reader rejects outright. Read the nanos as plain longs
-    * (legacy conf) and truncate to microsecond timestamps — the same
-    * ns→µs truncation DuckDB applies, so oracle comparisons line up.
-    */
-  private def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(spark.read.parquet(s"$sfDir/events.parquet"))
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The schema `spark.read.parquet` infers for a table, memoized per JVM
+    * like [[rowCount]]: the testdata under an sfDir never changes, and
+    * each inference is a Spark job. Only the StructType is shared, never
+    * a DataFrame, so sessions stay independent.
+    *
+    * The memo key is the file path plus every session conf that changes
+    * the inferred types. Today that is only
+    * `spark.sql.legacy.parquet.nanosAsLong`: events.parquet stores ts as
+    * INT64 TIMESTAMP(NANOS), which Spark's vectorized reader rejects
+    * outright, so the conf is pinned here to read the nanos as plain
+    * longs (normalizeEventTs then truncates them to microseconds — the
+    * same ns→µs truncation DuckDB applies, so oracle comparisons line
+    * up). It is pinned for every table, not just events: it only changes
+    * INT64 TIMESTAMP(NANOS) columns, which no other table has, and a
+    * value that does not depend on load order means each table is
+    * inferred once. */
+  private[graft] def rawSchema(spark: SparkSession, sfDir: String,
+      name: String): StructType = {
+    spark.conf.set(NanosAsLong, "true")
+    val path = s"$sfDir/$name.parquet"
+    schemas.computeIfAbsent(s"$path|$NanosAsLong=${spark.conf.get(NanosAsLong)}",
+      _ => spark.read.parquet(path).schema)
   }
 
   /** Normalize the `ts` column to session-tz TIMESTAMP whatever the
     * parquet encoding. Two encodings have been observed from the driver's
     * generator: INT64 TIMESTAMP(NANOS) (read as plain longs via the
-    * legacy conf — integer DIV, a double division would lose precision at
-    * 1e18-scale nanos) and TIMESTAMP(MICROS) without isAdjustedToUTC,
-    * which Spark reads as TIMESTAMP_NTZ. Watermarks require TIMESTAMP
+    * legacy conf [[rawSchema]] pins — integer DIV, a double division
+    * would lose precision at 1e18-scale nanos) and TIMESTAMP(MICROS)
+    * without isAdjustedToUTC, which Spark reads as TIMESTAMP_NTZ. Watermarks require TIMESTAMP
     * (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on NTZ), so cast NTZ across;
     * the session tz is pinned UTC, so wall-clock values — and DuckDB
     * oracle comparisons — are unchanged. */

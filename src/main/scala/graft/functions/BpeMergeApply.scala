@@ -70,9 +70,13 @@ object BpeMergeApply {
     var i = 0
     while (i < n) {
       val x = arr.getUTF8String(i)
-      if (b.equals(x) && out.size() > 0 && a.equals(out.get(out.size() - 1)))
-        out.set(out.size() - 1, UTF8String.concat(a, b))
-      else out.add(x)
+      // null elements are skipped, as TrigramShingles does, so the
+      // declared containsNull=false holds
+      if (x != null) {
+        if (b.equals(x) && out.size() > 0 && a.equals(out.get(out.size() - 1)))
+          out.set(out.size() - 1, UTF8String.concat(a, b))
+        else out.add(x)
+      }
       i += 1
     }
     val res = new Array[Any](out.size())

@@ -48,8 +48,7 @@ case class TrigramShingles(child: Expression) extends UnaryExpression {
 
 object TrigramShingles {
   /** Static hot-path entry — called directly from generated code. */
-  def shingles(tokensRaw: ArrayData): GenericArrayData = {
-    val arr = tokensRaw.asInstanceOf[ArrayData]
+  def shingles(arr: ArrayData): GenericArrayData = {
     val n = arr.numElements()
     // drop empty tokens (split on ' ' emits them for repeated spaces)
     val toks = new java.util.ArrayList[UTF8String](n)

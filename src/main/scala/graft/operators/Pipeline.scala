@@ -60,12 +60,18 @@ object Pipeline {
   def dateFromFilename(fname: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     to_date(regexp_extract(fname, "crawl_([0-9]{8})_", 1), "yyyyMMdd")
 
-  /** S11: silver written Hive-partitioned by crawl date. */
+  /** S11: silver written Hive-partitioned by crawl date. Dynamic
+    * partition overwrite: a write replaces only the date partitions it
+    * carries, so daily runs into one directory append a new date and a
+    * re-run of a date replaces just that date (static mode would wipe
+    * every other date first). */
   def writeSilverPartitioned(silver: DataFrame, sourceFile: String,
       outDir: String): Unit =
     silver
       .withColumn("date", dateFromFilename(lit(sourceFile)))
-      .write.mode(SaveMode.Overwrite).partitionBy("date").parquet(outDir)
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("date").parquet(outDir)
 
   /** Gold features (P5 CASE WHEN encoding + P6 derived ratio with pinned
     * divide-by-zero, reference realestate_pipeline.py:175-183). */

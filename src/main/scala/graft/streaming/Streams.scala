@@ -62,16 +62,16 @@ object Streams extends QueryModule {
     d.getAbsolutePath
   }
 
-  /** File-source stream over the events parquet (schema pinned from a batch
-    * read — file sources require an explicit schema). The raw file's ts
-    * encoding has varied across driver testdata generations (INT64 nanos
-    * vs TIMESTAMP(MICROS)-NTZ — see Tables.normalizeEventTs), so the
-    * stream reads the RAW schema and normalizes ts after; watermarks
-    * demand a session-tz TIMESTAMP. package-private for the encoding
-    * fixture spec. */
+  /** File-source stream over the events parquet (file sources require an
+    * explicit schema: the batch schema from Tables' per-table memo, so a
+    * stream costs no inference job). The raw file's ts encoding has
+    * varied across testdata generations (INT64 nanos vs
+    * TIMESTAMP(MICROS)-NTZ — see Tables.normalizeEventTs), so the stream
+    * reads the RAW schema and normalizes ts after; watermarks demand a
+    * session-tz TIMESTAMP. package-private for the encoding fixture
+    * spec. */
   private[graft] def eventStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
+    val raw = Tables.rawSchema(s, dir, "events")
     // trailing glob: FileStreamSource only injects a (file-illegal)
     // basePath option when the path is NOT a glob — and our source is a
     // single parquet file, not a directory.
@@ -103,15 +103,49 @@ object Streams extends QueryModule {
     version + 1
   }
 
+  /** True when the query's result can depend on the no-data micro-batch
+    * that runs after the last data batch only to advance the watermark:
+    * an outer join emits its null-extended rows once the watermark
+    * passes, an append-mode aggregate emits a window once it closes, and
+    * state timeouts and event-time or processing-time timers fire on
+    * watermark or clock advance. Inner joins, dropDuplicates and
+    * complete/update aggregates emit eagerly in the data batches, so
+    * their final batch only evicts state that the run then discards. */
+  private def needsFinalWatermarkBatch(df: DataFrame, mode: String): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, FlatMapGroupsWithState, Join, TransformWithState}
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, TimeMode}
+    df.queryExecution.analyzed.exists {
+      case j: Join => j.joinType != Inner
+      case _: Aggregate => mode == "append"
+      case f: FlatMapGroupsWithState => f.timeout != GroupStateTimeout.NoTimeout
+      case t: TransformWithState => t.timeMode != TimeMode.None()
+      case _ => false
+    }
+  }
+
   /** Run a streaming DF to completion into a memory sink, return the table.
-    * State partition count is pinned low for the run: each state partition
-    * costs per-batch store commits, and the checkpoint (fresh per run)
-    * freezes the count — size it to the state, not to the CPU count.
+    * Two session confs are pinned for the run and restored afterwards,
+    * both derived from the session and the query, never set by a user:
+    *
+    *  - State partitions: `min(8, defaultParallelism)`. Each state
+    *    partition costs per-batch store commits (a stream-stream join
+    *    holds 4 stores per partition), and more partitions than task
+    *    slots run the state stage in a second wave. The checkpoint is
+    *    fresh per run, so the count it freezes never outlives the run.
+    *  - No-data micro-batches: off unless [[needsFinalWatermarkBatch]].
+    *    With them on, an AvailableNow run ends with one batch that only
+    *    advances the watermark; for eagerly emitting queries that batch
+    *    changes no output row.
     */
   private def materialize(s: SparkSession, df: DataFrame, name: String,
       mode: String): DataFrame = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val partsKey = "spark.sql.shuffle.partitions"
+    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prevParts = s.conf.get(partsKey)
+    val prevNoData = s.conf.get(noDataKey)
+    s.conf.set(partsKey, math.min(8, s.sparkContext.defaultParallelism).toString)
+    if (!needsFinalWatermarkBatch(df, mode)) s.conf.set(noDataKey, "false")
     try {
       val query = df.writeStream
         .format("memory")
@@ -122,7 +156,8 @@ object Streams extends QueryModule {
         .start()
       query.awaitTermination()
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
+      s.conf.set(partsKey, prevParts)
+      s.conf.set(noDataKey, prevNoData)
       // Unload every state-store provider the finished run loaded (and
       // its 60s-interval maintenance thread): providers are cached per
       // (checkpoint, operator, partition) ACROSS queries, and a later

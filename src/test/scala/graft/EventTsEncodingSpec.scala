@@ -98,6 +98,29 @@ class EventTsEncodingSpec extends SparkSpec {
       s"NTZ fixture: got $windows windows / $events events, want 3 / 5")
   }
 
+  test("the memoized raw schema equals a fresh inference: all 10 tables " +
+      "and events under both ts encodings") {
+    def fresh(dir: String, name: String) =
+      spark.read.parquet(s"$dir/$name.parquet").schema
+    for (name <- Tables.names)
+      assert(Tables.rawSchema(spark, sf, name) == fresh(sf, name), name)
+    val encodings = Seq[(String, DataFrame => DataFrame)](
+      "memo_nanos" -> (df => df.withColumn("ts",
+        col("ts").cast("long") * 1000000000L)),
+      "memo_ntz" -> (df => df.withColumn("ts",
+        col("ts").cast("timestamp_ntz"))))
+    val rawTs = for ((enc, encode) <- encodings) yield {
+      val dir = base.resolve(enc); wipe(dir)
+      writeFixture(dir, encode)
+      val memo = Tables.rawSchema(spark, dir.toString, "events")
+      assert(memo == fresh(dir.toString, "events"), enc)
+      assert(Tables.load(spark, dir.toString, "events").schema("ts")
+        .dataType == TimestampType, enc)
+      memo("ts").dataType
+    }
+    assert(rawTs == Seq(LongType, TimestampNTZType))
+  }
+
   test("driver testdata at sf0.001 round-trips the CURRENT encoding") {
     // whatever the generator emits today must normalize to TIMESTAMP and
     // carry UTC wall-clock values matching the batch read

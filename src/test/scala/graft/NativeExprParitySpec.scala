@@ -68,6 +68,28 @@ class NativeExprParitySpec extends SparkSpec {
     assert(fold2 == Seq("abc", "ab", "abc") && nat2 == fold2)
   }
 
+  test("bpe_merge_apply skips null elements, codegen and interpreted") {
+    // a per-row CASE keeps the array from being constant-folded, so the
+    // projection really runs in the mode under test
+    val df = spark.range(2).select(array(lit("l"),
+      when(col("id") === 0, lit(null).cast("string")).otherwise(lit("x")),
+      lit("l"), lit(null).cast("string"), lit("l")).as("syms"))
+    for ((factory, wholeStage) <- Seq("CODEGEN_ONLY" -> "true",
+        "NO_CODEGEN" -> "false")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val got = df.select(call_function("bpe_merge_apply", col("syms"),
+            lit("l"), lit("l"))).orderBy(col("syms")(1).asc_nulls_first)
+          .collect().map(_.getSeq[String](0).toSeq).toSeq
+        assert(got == Seq(Seq("ll", "l"), Seq("l", "x", "ll")), factory)
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
   test("gram_sums ≡ the double-posexplode DECIMAL sums on embeddings") {
     val q = Tables.load(spark, sf, "embeddings").selectExpr("vec_id",
       "transform(CAST(embedding AS ARRAY<DOUBLE>), x -> " +

@@ -71,6 +71,22 @@ class PipelineSpec extends SparkSpec {
     assert(scan.metadata.getOrElse("PartitionFilters", "").contains("date"))
   }
 
+  test("silver writes of two crawl dates into one directory both survive") {
+    val out = s"${Tables.scratchRoot}/pipeline_silver_two_days"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    val silver = Pipeline.bronzeToSilver(bronzeFixture)
+    Pipeline.writeSilverPartitioned(silver, "crawl_20251003_120000.json", out)
+    Pipeline.writeSilverPartitioned(silver.limit(1),
+      "crawl_20251004_120000.json", out)
+    def perDate = spark.read.parquet(out).groupBy("date").count()
+      .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+    assert(perDate == Map("2025-10-03" -> 3L, "2025-10-04" -> 1L))
+    // rewriting a date replaces only that date
+    Pipeline.writeSilverPartitioned(silver.limit(2),
+      "crawl_20251003_130000.json", out)
+    assert(perDate == Map("2025-10-03" -> 2L, "2025-10-04" -> 1L))
+  }
+
   test("silver→gold derives location encoding and price_per_m2") {
     val gold = Pipeline.silverToGold(Pipeline.bronzeToSilver(bronzeFixture))
     val hcm = gold.filter(col("Address").contains("Hồ Chí Minh")).collect()(0)

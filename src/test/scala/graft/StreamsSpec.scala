@@ -355,6 +355,33 @@ class StreamsSpec extends SparkSpec {
     assert(v1.length == 2 && v1.forall(_.getString(3) == "view"))
   }
 
+  test("stream_stream_join ends after its one data batch, " +
+      "stream_join_left_outer keeps its final-watermark batch, and both " +
+      "equal their batch SQL") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    // one progress event per executed micro-batch, tagged by query name
+    val progressed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = {
+        progressed.add(e.progress.name); ()
+      }
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    Tables.registerViews(spark, sf)
+    spark.streams.addListener(listener)
+    try for ((name, batches) <- Seq("stream_stream_join" -> 1,
+        "stream_join_left_outer" -> 2)) {
+      val got = SparkEntry.queries(name)(spark, sf).collect().toSeq
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      val n = progressed.toArray.count(_ == name)
+      assert(n == batches, s"$name ran $n micro-batches, want $batches")
+      assert(got == spark.sql(SparkEntry.oracleSql(name)).collect().toSeq,
+        s"$name differs from its batch SQL")
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("stream-stream outer-join state is EVICTED by the watermark: " +
       "state rows track rate x window, not stream length") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
