@@ -5,73 +5,19 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{CosineSim, LshBucket, MinHashSig, NGramsGenerator, RollingHash}
 
-/** SparkSessionExtensions entry point: installs the engine's custom
-  * codegen expressions as SQL functions at session build, so any session
-  * created with `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`) has them without per-query
-  * registration — the deployment path for the Thrift-Server/BI surface,
-  * where query text arrives from clients that can't call Scala.
+/** The engine's custom SQL functions, declared once in `functions` and
+  * installed once per session at build time by `class GraftExtensions`.
+  * That is the only install path: nothing registers them per query.
+  *
+  * Sessions come from `GraftSession.local`, which sets
+  * `spark.sql.extensions=graft.GraftExtensions`; a session built any other
+  * way needs that conf (or `.withExtensions(new GraftExtensions)`) to see
+  * the functions. Sessions derived from one inherit them: `foreachBatch`
+  * micro-batch clones, and `newSession()` sessions such as the Thrift
+  * server's. That is what lets BI clients, which send SQL text and cannot
+  * call Scala, use the same functions the DataFrame queries do.
   */
 object GraftExtensions {
-  /** Registry-path install for sessions not built with the extensions conf
-    * (idempotent; same builders as the injectFunction path). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.functions.VectorExprs.register(spark)
-    graft.functions.RollingHash.register(spark)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngrams_gen", exprs => NGramsGenerator(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries", graft.functions.MisraGries.build, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "trigram_shingles",
-      exprs => graft.functions.TrigramShingles(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "space_tokens",
-      exprs => graft.functions.SpaceTokens(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_merge_apply",
-      exprs => graft.functions.BpeMergeApply(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_sums",
-      exprs => graft.functions.GramSums(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantiles",
-      exprs => graft.functions.KllQuantiles(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_sketch_agg",
-      exprs => graft.functions.ThetaSketchAgg(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_estimate",
-      exprs => graft.functions.ThetaEstimate(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_intersect_est",
-      exprs => graft.functions.ThetaIntersectEst(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_union_est",
-      exprs => graft.functions.ThetaUnionEst(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_anotb_est",
-      exprs => graft.functions.ThetaAnotBEst(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "theta_assert_exact",
-      exprs => graft.functions.ThetaAssertExact(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg", bloomAgg, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain", bloomProbe, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_area",
-      exprs => graft.functions.ParseArea(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_number",
-      exprs => graft.functions.ParseNumber(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "normalize_price",
-      exprs => graft.functions.NormalizePrice(exprs.head), "scala_udf")
-    registerStrategies(spark)
-  }
-
   /** Spark ships BloomFilterAggregate / BloomFilterMightContain as
     * internal expressions (the machinery behind InjectRuntimeFilter) but
     * does NOT expose them in the public function registry — surfacing
@@ -84,100 +30,97 @@ object GraftExtensions {
     org.apache.spark.sql.catalyst.expressions
       .BloomFilterMightContain(exprs(0), exprs(1))
 
-  private def registerStrategies(
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(graft.plans.GraftStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.GraftStrategy
-    if (!spark.experimental.extraOptimizations
-        .contains(graft.plans.PruneAsofJoinColumns))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PruneAsofJoinColumns
-  }
+  /** (name, usage, builder) of every custom SQL function. */
+  private[graft] val functions
+      : Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("rolling_hash", "rolling_hash(str) - 64-bit polynomial rolling hash",
+      exprs => RollingHash(exprs.head)),
+    ("cosine_sim", "cosine_sim(a, b) - cosine similarity of double arrays",
+      exprs => CosineSim(exprs(0), exprs(1))),
+    ("lsh_bucket", "lsh_bucket(vec, table, bits) - sign-random-projection bucket",
+      exprs => LshBucket(exprs(0), exprs(1), exprs(2))),
+    ("minhash_sig", "minhash_sig(hashes, perms) - MinHash signature",
+      exprs => MinHashSig(exprs(0), exprs(1))),
+    ("sorted_intersect_size",
+      "sorted_intersect_size(a, b) - |A intersect B| of sorted bigint arrays",
+      exprs => graft.functions.SortedIntersectSize(exprs(0), exprs(1))),
+    ("positional_any_equal",
+      "positional_any_equal(a, b) - exists i: a[i] = b[i] (bigint arrays)",
+      exprs => graft.functions.PositionalAnyEqual(exprs(0), exprs(1))),
+    ("nearest_centroid",
+      "nearest_centroid(vec, codebook) - argmax-cosine cell id",
+      exprs => graft.functions.NearestCentroid(exprs(0), exprs(1))),
+    ("ngrams_gen", "ngrams_gen(tokens, n) - generator of (pos, ngram) rows",
+      exprs => NGramsGenerator(exprs(0), exprs(1))),
+    ("misra_gries",
+      "misra_gries(term, capacity) - heavy-hitters sketch (term, min_count)",
+      graft.functions.MisraGries.build),
+    ("trigram_shingles",
+      "trigram_shingles(tokens) - distinct word-trigram shingles",
+      exprs => graft.functions.TrigramShingles(exprs.head)),
+    ("space_tokens",
+      "space_tokens(text) - non-empty single-space-separated tokens",
+      exprs => graft.functions.SpaceTokens(exprs.head)),
+    ("bpe_merge_apply",
+      "bpe_merge_apply(syms, pa, pb) - greedy left-to-right BPE merge pass",
+      exprs => graft.functions.BpeMergeApply(exprs(0), exprs(1), exprs(2))),
+    ("gram_sums",
+      "gram_sums(vec) - (n, d, sv, pp) exact Gram sums of 2^-20-quantized doubles",
+      exprs => graft.functions.GramSums(exprs.head)),
+    ("kll_quantiles",
+      "kll_quantiles(x) - KLL sketch [p50, p90, p99] of a double column",
+      exprs => graft.functions.KllQuantiles(exprs.head)),
+    // Spark 4.1 has a public builtin of this name
+    // (catalyst.expressions.aggregate.ThetaSketchAgg); this entry replaces
+    // it in every session, which logs one "replaced a previously
+    // registered function" warning per session built. ExtensionsSpec
+    // pins that the engine's sketch wins.
+    ("theta_sketch_agg",
+      "theta_sketch_agg(x) - theta sketch of a key column (binary); " +
+        "replaces Spark's builtin of the same name",
+      exprs => graft.functions.ThetaSketchAgg(exprs.head)),
+    ("theta_estimate",
+      "theta_estimate(sk) - distinct-count estimate of a theta sketch",
+      exprs => graft.functions.ThetaEstimate(exprs.head)),
+    ("theta_intersect_est",
+      "theta_intersect_est(a, b) - |A intersect B| estimate",
+      exprs => graft.functions.ThetaIntersectEst(exprs(0), exprs(1))),
+    ("theta_union_est",
+      "theta_union_est(a, b) - |A union B| estimate",
+      exprs => graft.functions.ThetaUnionEst(exprs(0), exprs(1))),
+    ("theta_anotb_est",
+      "theta_anotb_est(a, b) - |A minus B| estimate",
+      exprs => graft.functions.ThetaAnotBEst(exprs(0), exprs(1))),
+    ("theta_assert_exact",
+      "theta_assert_exact(sk) - sketch unchanged; error if estimate-mode",
+      exprs => graft.functions.ThetaAssertExact(exprs.head)),
+    ("bloom_filter_agg",
+      "bloom_filter_agg(xxhash64(x), items, bits) - bloom sketch of hashed keys",
+      bloomAgg),
+    ("might_contain",
+      "might_contain(bloom, xxhash64(x)) - bloom membership probe",
+      bloomProbe),
+    ("parse_area",
+      "parse_area(str) - F1 area parse (first [0-9,.]+ run, commas stripped)",
+      exprs => graft.functions.ParseArea(exprs.head)),
+    ("parse_number",
+      "parse_number(str) - F2 int(float(str)) with truncation, else null",
+      exprs => graft.functions.ParseNumber(exprs.head)),
+    ("normalize_price",
+      "normalize_price(str) - F3 price in billions VND (ty/trieu units)",
+      exprs => graft.functions.NormalizePrice(exprs.head)))
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
+  // the 5-arg form is the one that carries a usage string without
+  // demanding the validated Arguments/Examples layout of the full form
+  @annotation.nowarn("cat=deprecation")
   private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name)
+    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-      ("rolling_hash", "rolling_hash(str) - 64-bit polynomial rolling hash",
-        exprs => RollingHash(exprs.head)),
-      ("cosine_sim", "cosine_sim(a, b) - cosine similarity of double arrays",
-        exprs => CosineSim(exprs(0), exprs(1))),
-      ("lsh_bucket", "lsh_bucket(vec, table, bits) - sign-random-projection bucket",
-        exprs => LshBucket(exprs(0), exprs(1), exprs(2))),
-      ("minhash_sig", "minhash_sig(hashes, perms) - MinHash signature",
-        exprs => MinHashSig(exprs(0), exprs(1))),
-      ("sorted_intersect_size",
-        "sorted_intersect_size(a, b) - |A intersect B| of sorted bigint arrays",
-        exprs => graft.functions.SortedIntersectSize(exprs(0), exprs(1))),
-      ("positional_any_equal",
-        "positional_any_equal(a, b) - exists i: a[i] = b[i] (bigint arrays)",
-        exprs => graft.functions.PositionalAnyEqual(exprs(0), exprs(1))),
-      // must be injected (not only temp-registered): foreachBatch
-      // micro-batch sessions are CLONES that inherit injected functions
-      // but not later createOrReplaceTempFunction calls — ivfIndexIngest
-      // cell-assigns inside foreachBatch and resolved nothing without this
-      ("nearest_centroid",
-        "nearest_centroid(vec, codebook) - argmax-cosine cell id",
-        exprs => graft.functions.NearestCentroid(exprs(0), exprs(1))),
-      ("ngrams_gen", "ngrams_gen(tokens, n) - generator of (pos, ngram) rows",
-        exprs => NGramsGenerator(exprs(0), exprs(1))),
-      ("misra_gries",
-        "misra_gries(term, capacity) - heavy-hitters sketch (term, min_count)",
-        graft.functions.MisraGries.build),
-      ("trigram_shingles",
-        "trigram_shingles(tokens) - distinct word-trigram shingles",
-        exprs => graft.functions.TrigramShingles(exprs.head)),
-      ("space_tokens",
-        "space_tokens(text) - non-empty single-space-separated tokens",
-        exprs => graft.functions.SpaceTokens(exprs.head)),
-      ("bpe_merge_apply",
-        "bpe_merge_apply(syms, pa, pb) - greedy left-to-right BPE merge pass",
-        exprs => graft.functions.BpeMergeApply(exprs(0), exprs(1), exprs(2))),
-      ("gram_sums",
-        "gram_sums(vec) - (n, d, sv, pp) exact Gram sums of 2^-20-quantized doubles",
-        exprs => graft.functions.GramSums(exprs.head)),
-      ("kll_quantiles",
-        "kll_quantiles(x) - KLL sketch [p50, p90, p99] of a double column",
-        exprs => graft.functions.KllQuantiles(exprs.head)),
-      ("theta_sketch_agg",
-        "theta_sketch_agg(x) - theta sketch of a key column (binary)",
-        exprs => graft.functions.ThetaSketchAgg(exprs.head)),
-      ("theta_estimate",
-        "theta_estimate(sk) - distinct-count estimate of a theta sketch",
-        exprs => graft.functions.ThetaEstimate(exprs.head)),
-      ("theta_intersect_est",
-        "theta_intersect_est(a, b) - |A intersect B| estimate",
-        exprs => graft.functions.ThetaIntersectEst(exprs(0), exprs(1))),
-      ("theta_union_est",
-        "theta_union_est(a, b) - |A union B| estimate",
-        exprs => graft.functions.ThetaUnionEst(exprs(0), exprs(1))),
-      ("theta_anotb_est",
-        "theta_anotb_est(a, b) - |A minus B| estimate",
-        exprs => graft.functions.ThetaAnotBEst(exprs(0), exprs(1))),
-      ("theta_assert_exact",
-        "theta_assert_exact(sk) - sketch unchanged; error if estimate-mode",
-        exprs => graft.functions.ThetaAssertExact(exprs.head)),
-      ("bloom_filter_agg",
-        "bloom_filter_agg(xxhash64(x), items, bits) - bloom sketch of hashed keys",
-        GraftExtensions.bloomAgg),
-      ("might_contain",
-        "might_contain(bloom, xxhash64(x)) - bloom membership probe",
-        GraftExtensions.bloomProbe),
-      ("parse_area",
-        "parse_area(str) - F1 area parse (first [0-9,.]+ run, commas stripped)",
-        exprs => graft.functions.ParseArea(exprs.head)),
-      ("parse_number",
-        "parse_number(str) - F2 int(float(str)) with truncation, else null",
-        exprs => graft.functions.ParseNumber(exprs.head)),
-      ("normalize_price",
-        "normalize_price(str) - F3 price in billions VND (ty/trieu units)",
-        exprs => graft.functions.NormalizePrice(exprs.head)))
-    for ((name, usage, builder) <- fns)
+    for ((name, usage, builder) <- GraftExtensions.functions)
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     // whole-operator extension (SURVEY §2.6 (c)): the as-of join planner
     // strategy for graft.plans.AsofJoinPlan, plus the optimizer rule that

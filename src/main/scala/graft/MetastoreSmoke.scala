@@ -27,16 +27,11 @@ object MetastoreSmoke {
 
   private def session(): SparkSession = {
     sys.props("derby.system.home") = base // keep derby.log out of the repo
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("metastore-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-      .config("spark.sql.catalogImplementation", "hive")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    GraftSession.local(extra = Map(
+      "spark.sql.warehouse.dir" -> s"$base/warehouse",
+      "javax.jdo.option.ConnectionURL" ->
+        s"jdbc:derby:;databaseName=$base/metastore_db;create=true",
+      "spark.sql.catalogImplementation" -> "hive"))
   }
 
   def main(args: Array[String]): Unit = args.headOption match {

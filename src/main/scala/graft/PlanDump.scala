@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registered queries to files —
   * the optimization-round evidence trail (`plans/r16/<q>_{before,after}.txt`).
   *
@@ -11,23 +9,15 @@ import org.apache.spark.sql.SparkSession
   * Plan-only: nothing is executed by the dump itself; queries whose
   * *construction* runs eager BSP rounds (components/pagerank/bfs) do run
   * those rounds, and their dump shows the final post-loop plan — noted
-  * in OPTIMIZATION_r16.md where it matters. Session config matches
-  * Bench (local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus, UTC) so
-  * dumped plans are the bench's plans.
+  * in OPTIMIZATION_r16.md where it matters. The session comes from
+  * GraftSession, as Bench's does, so dumped plans are the bench's plans.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.length > 3) args.drop(3).toSeq

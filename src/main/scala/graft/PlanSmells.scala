@@ -235,13 +235,7 @@ object PlanSmells {
     // scaladoc's update command), never an argument-less reflex
     // (ADVICE r13)
     val outPath = args.lift(1).getOrElse("PLAN_SMELLS.json")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val stats = statsFor(spark, sfDir)

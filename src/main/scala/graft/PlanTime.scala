@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Split a query's wall time into plan-construction+optimization vs
   * execution (noop sink), for the optimization round's "where does the
   * time go" audit (guide §1/§7.3). Two rounds each so JIT warmup is
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
 object PlanTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args.drop(1); round <- 1 to 2) {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiler: time named queries (twice, to split plan/JIT warmup
   * from steady state) and optionally dump the executed plan.
   *
@@ -12,14 +10,7 @@ object Profile {
     val sfDir = args(0)
     val explain = args.contains("--explain")
     val names = args.drop(1).filterNot(_ == "--explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     for (name <- names) {
       val fn = SparkEntry.queries(name)

@@ -56,17 +56,9 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).getOrElse("10000")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.sql.hive.thriftServer.singleSession", "true")
-      .config("hive.server2.thrift.port", port)
-      .getOrCreate()
+    val spark = GraftSession.local(extra = Map(
+      "spark.sql.hive.thriftServer.singleSession" -> "true",
+      "hive.server2.thrift.port" -> port))
     spark.sparkContext.setLogLevel("WARN")
     start(spark, sfDir)
     println(s"graft-serve: listening on jdbc:hive2://localhost:$port " +

@@ -153,14 +153,7 @@ object Verify {
     // optional extra args: restrict to the named queries (dev iteration);
     // the driver always passes exactly (sfDir, outDir) → full run
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     // cross-run scratch containment (r17): same stance as Bench — the
     // dump must build its own derived tables, not read a prior run's.

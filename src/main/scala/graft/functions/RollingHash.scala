@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -51,12 +49,4 @@ object RollingHash {
     }
     h
   }
-
-  /** Register `rolling_hash` as a SQL function on the session (the
-    * FunctionRegistry path a SparkSessionExtensions.injectFunction would
-    * use; done per-session here so queries stay self-contained).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "scala_udf")
 }

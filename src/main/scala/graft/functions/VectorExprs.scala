@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -537,56 +537,21 @@ case class LshBucket(left: Expression, right: Expression, bitsExpr: Expression)
 }
 
 object VectorExprs {
-  /** Register both kernels on the session's FunctionRegistry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "lsh_bucket", exprs => LshBucket(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "positional_any_equal",
-      exprs => PositionalAnyEqual(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "nearest_centroid",
-      exprs => NearestCentroid(exprs(0), exprs(1)), "scala_udf")
-  }
-
-  def minhashSig(spark: SparkSession, hashes: Column, perms: Int): Column = {
-    register(spark)
+  def minhashSig(hashes: Column, perms: Int): Column =
     call_function("minhash_sig", hashes, lit(perms))
-  }
 
-  def sortedIntersectSize(spark: SparkSession, a: Column, b: Column)
-      : Column = {
-    register(spark)
+  def sortedIntersectSize(a: Column, b: Column): Column =
     call_function("sorted_intersect_size", a, b)
-  }
 
-  def positionalAnyEqual(spark: SparkSession, a: Column, b: Column)
-      : Column = {
-    register(spark)
+  def positionalAnyEqual(a: Column, b: Column): Column =
     call_function("positional_any_equal", a, b)
-  }
 
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def cosine(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
-  }
 
-  def nearestCentroid(spark: SparkSession, vec: Column, codebook: Column)
-      : Column = {
-    register(spark)
+  def nearestCentroid(vec: Column, codebook: Column): Column =
     call_function("nearest_centroid", vec, codebook)
-  }
 
-  def lshBucket(spark: SparkSession, vec: Column, table: Column, bits: Int): Column = {
-    register(spark)
+  def lshBucket(vec: Column, table: Column, bits: Int): Column =
     call_function("lsh_bucket", vec, table, lit(bits))
-  }
 }

@@ -489,7 +489,6 @@ object Analytics extends QueryModule {
              EXCEPT
              SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')) AS n_f_only"""),
       (s, dir) => {
-        graft.GraftExtensions.register(s)
         t(s, dir, "orders")
           .agg(
             expr("theta_sketch_agg(o_custkey) FILTER (WHERE o_orderstatus = 'F')")

@@ -150,7 +150,6 @@ object Curation extends QueryModule {
     * text (same mechanism, observable overlap signal).
     */
   private def docGrams(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.register(s)
     docs(s, dir)
       .select(col("doc_id"),
         explode(call_function("trigram_shingles",
@@ -1391,7 +1390,6 @@ object Curation extends QueryModule {
         FROM f JOIN cp USING (fp) LEFT JOIN st ON f.doc_id = st.doc_id
         ORDER BY f.doc_id"""),
       (s, dir) => {
-        graft.GraftExtensions.register(s)
         val t = docs(s, dir).select(col("doc_id"), tokens(col("text")).as("ts"))
         // identical recipe to text_fingerprint: md5 over the sorted
         // distinct token set — the 16-byte near-dup cluster key

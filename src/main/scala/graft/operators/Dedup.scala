@@ -64,13 +64,12 @@ object Dedup extends QueryModule {
     * reach an aggregate (minhash signatures). */
   private def docShingles(s: SparkSession, dir: String,
       requireNonEmpty: Boolean = true): DataFrame =
-    docShinglesOf(s, t(s, dir, "documents"), requireNonEmpty)
+    docShinglesOf(t(s, dir, "documents"), requireNonEmpty)
 
   /** Same shingling over an arbitrary (doc_id, text) frame — the unit the
     * incremental minhash index ingests per micro-batch. */
-  private[graft] def docShinglesOf(s: SparkSession, docs: DataFrame,
+  private[graft] def docShinglesOf(docs: DataFrame,
       requireNonEmpty: Boolean = true): DataFrame = {
-    graft.GraftExtensions.register(s)
     val base = docs
       .select(col("doc_id"),
         call_function("trigram_shingles", split(col("text"), " ")).as("sh"))
@@ -209,7 +208,7 @@ object Dedup extends QueryModule {
     // every oracled run bit-replays in DuckDB.
     val (perms, bands, rows) = minhashConfig(
       Tables.footerRowCount(s, s"$dir/documents.parquet"))
-    minhashBandFrameOf(s, t(s, dir, "documents"), perms, bands, rows)
+    minhashBandFrameOf(t(s, dir, "documents"), perms, bands, rows)
   }
 
   /** [[minhashBandFrame]] over an arbitrary (doc_id, text) frame at an
@@ -217,7 +216,7 @@ object Dedup extends QueryModule {
     * the incremental index: the banding config must come from the whole
     * corpus (not the batch) so every batch's band keys live in the same
     * key space as the persisted postings they join against. */
-  private[graft] def minhashBandFrameOf(s: SparkSession, docs: DataFrame,
+  private[graft] def minhashBandFrameOf(docs: DataFrame,
       perms: Int, bands: Int, rows: Int): DataFrame = {
     import graft.functions.VectorExprs
     // sort_array: invisible to Jaccard (set semantics) and to the
@@ -226,7 +225,7 @@ object Dedup extends QueryModule {
     // instead of array_intersect's per-meeting hash set + materialized
     // result array — the verify was the 100× hot spot (MinhashProbe:
     // 58.5M meetings, verify ≈ 80% of wall-clock).
-    val sh = docShinglesOf(s, docs)
+    val sh = docShinglesOf(docs)
       .select(col("doc_id"),
         // coalesce(…, 0): never fires (shingles are non-null strings by
         // construction) but it makes the lambda PROVABLY non-nullable,
@@ -238,7 +237,7 @@ object Dedup extends QueryModule {
             conv(substring(md5(x), 1, 12), 16, 10).cast("long") % 1000003L,
             lit(0L)))))
           .as("hs"))
-      .withColumn("sig", VectorExprs.minhashSig(s, col("hs"), perms))
+      .withColumn("sig", VectorExprs.minhashSig(col("hs"), perms))
       .persist()
     // `pre` = the band keys of all EARLIER bands (slice of length
     // band_id): a true pair's bands agree in up to `bands` places, and
@@ -289,16 +288,14 @@ object Dedup extends QueryModule {
     * higher-order lambda in the join condition dropped the ENTIRE band
     * join out of whole-stage codegen — measured 8× on the band join
     * end-to-end, swamping the multiplicity it saved. */
-  private[graft] def firstAgreeingBand(s: SparkSession): Column =
-    !graft.functions.VectorExprs.positionalAnyEqual(
-      s, col("x.pre"), col("y.pre"))
+  private[graft] def firstAgreeingBand: Column =
+    !graft.functions.VectorExprs.positionalAnyEqual(col("x.pre"), col("y.pre"))
 
   /** Exact Jaccard of a band-join meeting aliased `x`/`y` — ONE
     * zero-allocation merge scan per meeting; |A∪B| from the size
     * identity (same arithmetic as the oracle's sizes CTE). */
-  private[graft] def meetingJaccard(s: SparkSession): Column = {
-    val inter = graft.functions.VectorExprs.sortedIntersectSize(
-      s, col("x.hs"), col("y.hs"))
+  private[graft] def meetingJaccard: Column = {
+    val inter = graft.functions.VectorExprs.sortedIntersectSize(col("x.hs"), col("y.hs"))
     inter.cast("double") / (size(col("x.hs")) + size(col("y.hs")) - inter)
   }
 
@@ -313,7 +310,7 @@ object Dedup extends QueryModule {
     // no broadcast hint: the band table is per-doc (unbounded at
     // scale) — the equi-join shuffles on (band_id, bkey) and AQE
     // broadcasts by itself when the input is actually small.
-    val jac = meetingJaccard(s)
+    val jac = meetingJaccard
     bandFrame.as("x")
       .join(bandFrame.as("y"),
         col("x.band_id") === col("y.band_id") &&
@@ -323,7 +320,7 @@ object Dedup extends QueryModule {
       // Jaccard merge scan only on the one surviving meeting per
       // pair — which also makes pairs structurally unique, so the
       // old post-verify .distinct() shuffle is gone entirely.
-      .filter(firstAgreeingBand(s) && jac >= 0.2)
+      .filter(firstAgreeingBand && jac >= 0.2)
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
         round(jac, 6).as("jaccard"))
   }
@@ -454,7 +451,7 @@ object Dedup extends QueryModule {
       .parquet(s"$stateRoot/in/*")
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val frame = minhashBandFrameOf(s, batch, perms, bands, rows)
+        val frame = minhashBandFrameOf(batch, perms, bands, rows)
           .withColumn("seq", lit(batchId)).persist()
         val idx = StateManifest.read(s, postDir).getOrElse(frame.limit(0))
         // the parquet roundtrip (and the union with it) drops the
@@ -469,7 +466,7 @@ object Dedup extends QueryModule {
             col("band_id"), col("bkey"),
             transform(col("pre"), x => coalesce(x, lit(0L))).as("pre"),
             col("seq"), col("in_index"))
-        val jac = meetingJaccard(s)
+        val jac = meetingJaccard
         // new-vs-index meetings in either id order (the index doc is
         // always the x side, seen once); new-vs-new once via id order.
         // Direction: each side's akey uses ITS OWN seq — the index
@@ -479,7 +476,7 @@ object Dedup extends QueryModule {
             col("x.band_id") === col("y.band_id") &&
               col("x.bkey") === col("y.bkey") &&
               (col("x.in_index") || col("x.doc_id") < col("y.doc_id")))
-          .filter(firstAgreeingBand(s) && jac >= 0.2)
+          .filter(firstAgreeingBand && jac >= 0.2)
           .select(col("x.doc_id").as("xa"), col("y.doc_id").as("ya"),
             akey(col("x.seq"), col("x.doc_id")).as("ka"),
             akey(col("y.seq"), col("y.doc_id")).as("kb"))
@@ -596,12 +593,12 @@ object Dedup extends QueryModule {
       .parquet(s"$stateRoot/in/*")
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val frame = semCellAssign(s, batch, cb)
+        val frame = semCellAssign(batch, cb)
           .withColumn("seq", lit(batchId)).persist()
         val idx = StateManifest.read(s, postDir).getOrElse(frame.limit(0))
         val un = idx.withColumn("in_index", lit(true))
           .unionByName(frame.withColumn("in_index", lit(false)))
-        val cos = VectorExprs.cosine(s, col("x.vec"), col("y.vec"))
+        val cos = VectorExprs.cosine(col("x.vec"), col("y.vec"))
         // new-vs-index meetings in either id order (the index vector is
         // always the x side, seen once); new-vs-new once via id order.
         // Direction: each side's akey uses ITS OWN seq — the index
@@ -679,7 +676,7 @@ object Dedup extends QueryModule {
     // gated = the meetings that actually reach the Jaccard merge scan
     // after the minimal-agreeing-band filter — the probe's measure of
     // verify multiplicity (raw/gated ≈ avg agreeing bands per pair).
-    (if (gated) met.filter(firstAgreeingBand(s)) else met).count()
+    (if (gated) met.filter(firstAgreeingBand) else met).count()
   }
 
   /** N-adaptive hyperplane-LSH sizing for embedding dedup → (bits,
@@ -798,12 +795,12 @@ object Dedup extends QueryModule {
   /** Cell assignment of an arbitrary (vec_id, vec) frame: one broadcast
     * codebook row + the native codegen nearest_centroid argmax inside
     * the scan pipeline → (vec_id, vec, cell). No N×k stream exists. */
-  private[graft] def semCellAssign(s: SparkSession, vecs: DataFrame,
+  private[graft] def semCellAssign(vecs: DataFrame,
       cb: DataFrame): DataFrame = {
     import graft.functions.VectorExprs
     vecs.crossJoin(broadcast(cb))
       .select(col("vec_id"), col("vec"),
-        VectorExprs.nearestCentroid(s, col("vec"), col("cb")).as("cell"))
+        VectorExprs.nearestCentroid(col("vec"), col("cb")).as("cell"))
   }
 
   private[graft] def semCellPairs(s: SparkSession, dir: String, k: Long)
@@ -812,14 +809,14 @@ object Dedup extends QueryModule {
     val allv = embPlantedCorpus(s, dir)
     // persisted: both sides of the cell self-join would otherwise
     // re-run the k·d argmax scan
-    val lists = semCellAssign(s, allv, semCellCodebook(s, dir, k))
+    val lists = semCellAssign(allv, semCellCodebook(s, dir, k))
       .persist()
     lists.as("x")
       .join(lists.as("y"),
         col("x.cell") === col("y.cell") &&
           col("x.vec_id") < col("y.vec_id"))
       .withColumn("cos_sim",
-        round(VectorExprs.cosine(s, col("x.vec"), col("y.vec")), 6))
+        round(VectorExprs.cosine(col("x.vec"), col("y.vec")), 6))
       .filter(col("cos_sim") >= 0.95)
       .select(col("x.cell").cast("long").as("cell"),
         col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
@@ -882,12 +879,12 @@ object Dedup extends QueryModule {
     // + sort costing ~2× cells-only on an all-direct corpus
     // (BENCH_gate_sweep_r14.json first cut: 3.6 s vs 1.74 s at 10×) —
     // kept here as the measured failure the aggregate-join form fixes.
-    val assigned = semCellAssign(s, embPlantedCorpus(s, dir),
+    val assigned = semCellAssign(embPlantedCorpus(s, dir),
       semCellCodebook(s, dir, k))
       .persist()
     val withOcc = assigned.join(
       assigned.groupBy("cell").agg(count(lit(1)).as("occ")), "cell")
-    val cos = VectorExprs.cosine(s, col("x.vec"), col("y.vec"))
+    val cos = VectorExprs.cosine(col("x.vec"), col("y.vec"))
     def verified(joined: DataFrame): DataFrame = joined
       .withColumn("cos_sim", round(cos, 6))
       .filter(col("cos_sim") >= 0.95)
@@ -904,7 +901,7 @@ object Dedup extends QueryModule {
       .select(col("vec_id"), col("vec"), col("cell"),
         explode(transform(sequence(lit(0), lit(tables - 1)), tb =>
           struct(tb.as("tbl"),
-            VectorExprs.lshBucket(s, col("vec"), tb, bits = bits)
+            VectorExprs.lshBucket(col("vec"), tb, bits = bits)
               .as("bucket")))).as("tb"))
       .select(col("vec_id"), col("vec"), col("cell"),
         col("tb.tbl"), col("tb.bucket"))
@@ -966,7 +963,7 @@ object Dedup extends QueryModule {
       col("vec_id"), col("vec"),
       explode(transform(sequence(lit(0), lit(tables - 1)), tb =>
         struct(tb.as("tbl"),
-          VectorExprs.lshBucket(s, col("vec"), tb, bits = bits)
+          VectorExprs.lshBucket(col("vec"), tb, bits = bits)
             .as("bucket"))))
         .as("tb"))
       .select(col("vec_id"), col("vec"), col("tb.tbl"), col("tb.bucket"))
@@ -1507,7 +1504,7 @@ object Dedup extends QueryModule {
             col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
               col("x.vec_id") < col("y.vec_id"))
           .withColumn("cos_sim",
-            round(VectorExprs.cosine(s, col("x.vec"), col("y.vec")), 6))
+            round(VectorExprs.cosine(col("x.vec"), col("y.vec")), 6))
           .filter(col("cos_sim") >= 0.95)
           .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
             col("cos_sim"))

@@ -352,7 +352,6 @@ object Relational extends QueryModule {
           ON e.event_type = q.event_type AND e.ts >= q.qts
         ORDER BY e.event_id"""),
       (s, dir) => {
-        graft.GraftExtensions.register(s)
         val ev = t(s, dir, "events")
         // full-width events on purpose: the PruneAsofJoinColumns optimizer
         // rule must shrink the left scan to (event_id, event_type, ts)
@@ -735,7 +734,6 @@ object Relational extends QueryModule {
                CAST(min(lo_s) AS BIGINT) AS first_window_epoch
         FROM hits GROUP BY 1 ORDER BY 1"""),
       (s, dir) => {
-        graft.GraftExtensions.register(s)
         val ev = t(s, dir, "events")
         val pts = ev.select(col("event_id"),
           unix_timestamp(col("ts")).as("ps"))
@@ -968,7 +966,6 @@ object Relational extends QueryModule {
       "agg_kll_quantiles",
       None,
       (s, dir) => {
-        graft.GraftExtensions.register(s)
         // scalar columns, not array<double>: the driver's comparator
         // sorts/hashes cell values and cannot hash an array cell.
         t(s, dir, "orders")

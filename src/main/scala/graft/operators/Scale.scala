@@ -68,7 +68,6 @@ object Scale extends QueryModule {
         GROUP BY 1
         ORDER BY 1"""),
       (s, dir) => {
-        graft.GraftExtensions.register(s)
         Tables.registerViews(s, dir)
         s.sql("""
           WITH hi AS (SELECT o_orderkey, o_orderpriority FROM orders

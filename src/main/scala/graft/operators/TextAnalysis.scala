@@ -331,7 +331,6 @@ object TextAnalysis extends QueryModule {
                       AS ts FROM documents))
         GROUP BY 1 ORDER BY n DESC, tg LIMIT 30"""),
       (s, dir) => {
-        graft.GraftExtensions.register(s)
         t(s, dir, "documents")
           .select(tokens(col("text")).as("ts"))
           .selectExpr("ngrams_gen(ts, 3)")
@@ -379,7 +378,6 @@ object TextAnalysis extends QueryModule {
         WHERE tok <> ''
         GROUP BY 1 ORDER BY min_count DESC, term LIMIT 10"""),
       (s, dir) => {
-        graft.GraftExtensions.register(s)
         t(s, dir, "documents")
           .select(explode(tokens(lower(col("text")))).as("tok"))
           .agg(call_function("misra_gries", col("tok"), lit(64)).as("sk"))
@@ -434,7 +432,6 @@ object TextAnalysis extends QueryModule {
           FROM documents)
         ORDER BY doc_id"""),
       (s, dir) => {
-        graft.functions.RollingHash.register(s)
         t(s, dir, "documents")
           .selectExpr("doc_id", "rolling_hash(text) AS fp")
           .orderBy("doc_id")

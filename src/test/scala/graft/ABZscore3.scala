@@ -127,14 +127,8 @@ object ABZscore3 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(
+      extra = Map("spark.sql.ansi.enabled" -> "true"))
     spark.sparkContext.setLogLevel("WARN")
     val parts = sliceParts(spark,
       Tables.load(spark, dir, "events").count(), minRows = 300)

@@ -175,7 +175,6 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("theta: exact below 2^15 distinct, bounded error past saturation") {
-    GraftExtensions.register(spark)
     import spark.implicits._
     // exact regime: small domain → estimates are exact integers
     val exact = spark.range(0, 1000)
@@ -200,7 +199,6 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("theta_assert_exact passes exact sketches, fails estimate-mode ones") {
-    GraftExtensions.register(spark)
     val ok = spark.range(0, 1000)
       .agg(expr("theta_estimate(theta_assert_exact(theta_sketch_agg(id)))"))
       .head.getLong(0)

@@ -195,7 +195,7 @@ class DedupSpec extends SparkSpec {
     // LSH — or the heterogeneous-routing path goes untested; gate on
     // the midpoint of the real occupancy range (bounded collect: k
     // cells, k = 16 at the pinned SFs)
-    val occs = Dedup.semCellAssign(spark, Dedup.embPlantedCorpus(spark, sf),
+    val occs = Dedup.semCellAssign(Dedup.embPlantedCorpus(spark, sf),
         Dedup.semCellCodebook(spark, sf, k))
       .groupBy("cell").count().collect().map(_.getLong(1))
     assert(occs.min < occs.max,
@@ -265,7 +265,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native trigram_shingles matches the HOF reference spelling exactly") {
-    GraftExtensions.register(spark)
     val docs = Tables.load(spark, sf, "documents")
     val both = docs.select(
       call_function("trigram_shingles", split(col("text"), " ")).as("native"),

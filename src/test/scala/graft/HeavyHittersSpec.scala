@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class HeavyHittersSpec extends SparkSpec {
 
   private def sketch(df: org.apache.spark.sql.DataFrame, cap: Int) = {
-    GraftExtensions.register(spark)
     df.agg(call_function("misra_gries", col("term"), lit(cap)).as("sk"))
       .select(explode(col("sk")).as("hh"))
       .select(col("hh.term"), col("hh.min_count"))

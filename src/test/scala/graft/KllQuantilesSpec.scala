@@ -38,7 +38,6 @@ class KllQuantilesSpec extends SparkSpec {
   }
 
   test("sketch merges across a forced repartition without drift") {
-    graft.GraftExtensions.register(spark)
     val base = Tables.load(spark, sf, "orders")
       .select(col("o_totalprice").cast("double").as("x"))
     def q(df: org.apache.spark.sql.DataFrame): Seq[Double] =

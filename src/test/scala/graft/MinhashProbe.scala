@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off diagnostic for the MinHash 100× cost profile: splits the
   * dedup_minhash_lsh wall-clock into signature materialization, thin
   * band join (meetings, no verify payload), and the full verify query —
@@ -13,16 +11,8 @@ object MinhashProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption
       .getOrElse(s"${Tables.scratchRoot}/scale100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        256)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.local(extra = Map(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "256"))
     spark.sparkContext.setLogLevel("WARN")
     def timed[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

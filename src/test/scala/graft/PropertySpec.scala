@@ -103,7 +103,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("misra-gries on random streams: exact when capacity covers, bounded when not") {
-    GraftExtensions.register(spark)
     for (trial <- 1 to 3) {
       val terms = sample(Gen.listOfN(800,
         Gen.frequency(
@@ -139,7 +138,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("trigram_shingles equals the HOF reference on random token arrays") {
-    GraftExtensions.register(spark)
     val token: Gen[String] = Gen.oneOf(
       Gen.const(""), Gen.alphaNumStr.map(_.take(5)),
       Gen.oneOf("中文", "Ω", "a b")) // multi-byte + embedded space

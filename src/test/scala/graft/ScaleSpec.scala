@@ -33,7 +33,6 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bloom prefilter actually prunes probe rows before the join") {
-    GraftExtensions.register(spark)
     Tables.registerViews(spark, sf)
     val hi = Tables.load(spark, sf, "orders")
       .filter(col("o_totalprice") > 400000)

@@ -380,7 +380,7 @@ object ScaleStress {
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val outJson = args.lift(2).getOrElse("/root/repo/BENCH_scale10.json")
     val scaledDir = s"${Tables.scratchRoot}/scale$copies"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCpus
     // spill counters (constrained-heap smoke mandate: a memory-bounded
     // run must show WHERE pressure lands, not just survive) — same
     // cheap task-end listener Bench.scala uses; re-registered on every
@@ -388,13 +388,7 @@ object ScaleStress {
     val spillMem = new java.util.concurrent.atomic.AtomicLong
     val spillDisk = new java.util.concurrent.atomic.AtomicLong
     def mkSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-        .getOrCreate()
+      val s = GraftSession.local(cpus)
       s.sparkContext.setLogLevel("WARN")
       s.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
@@ -445,11 +439,11 @@ object ScaleStress {
     // 1024 tiny blocks for a ~2 GB corpus and tripled the shuffle-heavy
     // ngram join (178 s vs 58 s at 32); 256 keeps per-task state small
     // (≈8 MB compressed input each) without drowning in block overhead
-    val scaledParts = math.min(256, cpus.toInt * copies)
+    val scaledParts = math.min(256, cpus * copies)
     def partitionsFor(dir: String): Unit =
       spark.conf.set(
         "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        if (dir == baseDir) cpus.toInt else scaledParts)
+        if (dir == baseDir) cpus else scaledParts)
 
     println(s"[scale] building ${copies}x corpus under $scaledDir")
     buildScaled(spark, baseDir, scaledDir, copies)
@@ -773,7 +767,7 @@ object ScaleStress {
           .repartition(32)
           .write.mode("overwrite").parquet(s"$bdir/embeddings.parquet")
         val gate = operators.Dedup.TwoStageOccupancyGate
-        val occs = operators.Dedup.semCellAssign(spark,
+        val occs = operators.Dedup.semCellAssign(
           operators.Dedup.embPlantedCorpus(spark, bdir),
           operators.Dedup.semCellCodebook(spark, bdir, k))
           .groupBy("cell").agg(count(lit(1)).as("occ")).persist()
@@ -999,7 +993,7 @@ object ScaleStress {
         ensureAlive()
         val zDir = s"$scaledDir-zipf"
         buildZipf(spark, scaledDir, zDir)
-        val p = cpus.toInt
+        val p = cpus
         def dist(df: DataFrame, keys: Seq[Column]): (Long, Long, Int) = {
           val counts = df
             .groupBy(pmod(hash(keys: _*), lit(p)).as("pt"))

@@ -52,8 +52,8 @@ class SimilaritySpec extends SparkSpec {
     assert((abits, atables) != (4, 8), "annConfig stayed pinned")
     def canaryRecall(out: org.apache.spark.sql.DataFrame): Long =
       out.filter(col("cand_id") === col("q_id") + 100000000L).count()
-    val fixedOut = Similarity.hyperplaneTopK(spark, corpus, 4, 8)
-    val adaptOut = Similarity.hyperplaneTopK(spark, corpus, abits, atables)
+    val fixedOut = Similarity.hyperplaneTopK(corpus, 4, 8)
+    val adaptOut = Similarity.hyperplaneTopK(corpus, abits, atables)
     val (fixedHits, adaptHits) = (canaryRecall(fixedOut),
       canaryRecall(adaptOut))
     assert(fixedHits > 0, "fixed baseline found no canary — vacuous")
@@ -62,7 +62,7 @@ class SimilaritySpec extends SparkSpec {
     // the scale claim: per-query candidates ~tables*32, a fraction of
     // the fixed family's ~N/2 linear growth
     def candCount(bits: Int, tables: Int): Long = {
-      val b = Similarity.hyperplaneBuckets(spark, corpus, bits, tables)
+      val b = Similarity.hyperplaneBuckets(corpus, bits, tables)
       val q = b.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"),
           col("tbl").as("q_tbl"), col("bucket").as("q_bucket"))

@@ -8,13 +8,9 @@ import org.scalatest.BeforeAndAfterAll
   * reuses the JVM-wide session, so suites in one forked JVM share it).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-    .getOrCreate()
+  // 4 cores whatever the host: partition counts, and with them plan
+  // shapes and task counts some specs assert, stay the same everywhere
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   lazy val sf: String = "/root/testdata/sf0.001"
 

@@ -528,13 +528,13 @@ class StreamsSpec extends SparkSpec {
         col("seq"))
     def akey(seq: org.apache.spark.sql.Column,
         d: org.apache.spark.sql.Column) = seq * lit(1099511627776L) + d
-    val jac = operators.Dedup.meetingJaccard(spark)
+    val jac = operators.Dedup.meetingJaccard
     val pairs = post.as("x")
       .join(post.as("y"),
         col("x.band_id") === col("y.band_id") &&
           col("x.bkey") === col("y.bkey") &&
           col("x.doc_id") < col("y.doc_id"))
-      .filter(operators.Dedup.firstAgreeingBand(spark) && jac >= 0.2)
+      .filter(operators.Dedup.firstAgreeingBand && jac >= 0.2)
       .select(col("x.doc_id").as("xa"), col("y.doc_id").as("ya"),
         akey(col("x.seq"), col("x.doc_id")).as("ka"),
         akey(col("y.seq"), col("y.doc_id")).as("kb"))
@@ -549,7 +549,7 @@ class StreamsSpec extends SparkSpec {
     val post = operators.StateManifest.read(spark, s"$stateRoot/postings").get
     def akey(seq: org.apache.spark.sql.Column,
         d: org.apache.spark.sql.Column) = seq * lit(1099511627776L) + d
-    val cos = VectorExprs.cosine(spark, col("x.vec"), col("y.vec"))
+    val cos = VectorExprs.cosine(col("x.vec"), col("y.vec"))
     val pairs = post.as("x")
       .join(post.as("y"),
         col("x.cell") === col("y.cell") &&

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Gate-calibration probe for dedup_semantic_two_stage's occupancy
@@ -20,20 +19,13 @@ object TwoStageGateProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/target/scratch/scale10")
     val outJson = args.lift(1).getOrElse("/root/repo/BENCH_gate_sweep_r14.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val n = Tables.footerRowCount(spark, s"$dir/embeddings.parquet") * 6 / 5
     val k = operators.Dedup.semCellCount(n)
     // occupancy distribution at the adaptive k (k-row agg — bounded)
-    val occ = operators.Dedup.semCellAssign(spark,
+    val occ = operators.Dedup.semCellAssign(
         operators.Dedup.embPlantedCorpus(spark, dir),
         operators.Dedup.semCellCodebook(spark, dir, k))
       .groupBy("cell").count()

@@ -16,7 +16,7 @@ class VectorExprsSpec extends SparkSpec {
     val pairs = emb.as("a").crossJoin(emb.as("b").limit(5))
       .select(col("a.vec").as("va"), col("b.vec").as("vb"))
     val diff = pairs
-      .withColumn("c_expr", VectorExprs.cosine(spark, col("va"), col("vb")))
+      .withColumn("c_expr", VectorExprs.cosine(col("va"), col("vb")))
       .withColumn("c_hof", Vectors.cosine(col("va"), col("vb")))
       .filter(abs(col("c_expr") - col("c_hof")) > 1e-12 ||
         col("c_expr").isNull =!= col("c_hof").isNull)
@@ -26,12 +26,11 @@ class VectorExprsSpec extends SparkSpec {
   test("cosine_sim nulls out on zero vectors") {
     val z = emb.limit(3)
       .withColumn("zero", expr("transform(vec, x -> 0.0d)"))
-      .select(VectorExprs.cosine(spark, col("vec"), col("zero")).as("c"))
+      .select(VectorExprs.cosine(col("vec"), col("zero")).as("c"))
     assert(z.collect().forall(_.isNullAt(0)))
   }
 
   test("sorted_intersect_size rejects nullable-element arrays at analysis") {
-    GraftExtensions.register(spark)
     // a bare array() literal with a null slot types as containsNull=true;
     // getLong on a null slot would read garbage, so the expression must
     // refuse at analysis instead of producing a wrong count
@@ -96,7 +95,7 @@ class VectorExprsSpec extends SparkSpec {
     val vec = array(lit(0.0), lit(1.0), lit(1.0), lit(0.0))
     val out = spark.range(0, 2000).repartition(4)
       .select(col("id"),
-        VectorExprs.nearestCentroid(spark, vec, cb).as("cell"))
+        VectorExprs.nearestCentroid(vec, cb).as("cell"))
     val expected = when(pmod(col("id"), lit(2)) === 0, lit(1L))
       .otherwise(lit(0L))
     val bad = out.filter(col("cell").isNull || col("cell") =!= expected)
@@ -109,7 +108,7 @@ class VectorExprsSpec extends SparkSpec {
       val tables = explode(sequence(lit(0), lit(7))).as("tbl")
       val both = emb.select(col("vec_id"), col("vec"), tables)
         .withColumn("b_expr",
-          VectorExprs.lshBucket(spark, col("vec"), col("tbl"), bits))
+          VectorExprs.lshBucket(col("vec"), col("tbl"), bits))
         .withColumn("b_hof", Vectors.lshBucket(col("vec"), col("tbl"), 64, bits))
       assert(both.filter(col("b_expr") =!= col("b_hof")).count() == 0,
         s"bucket mismatch at bits=$bits")
