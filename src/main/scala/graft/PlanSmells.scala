@@ -76,13 +76,12 @@ object PlanSmells {
     case c => c.toString
   } + "\""
 
-  /** Smell stats of one physical plan (exposed so the gate spec can
-    * prove the detector on a planted regression). Traversal descends
-    * into InMemoryTableScanExec cached plans (unwrapping AQE) so a
-    * persist() cannot hide a sub-plan from the audit; each distinct
-    * cached plan is one extra root (identity-dedup — a self-join over
-    * one cache must not double its counts). */
-  private[graft] def smellsOfPlan(plan: SparkPlan): Smells = {
+  /** The roots an audit walks: the plan itself plus, recursively, every
+    * InMemoryTableScanExec's cached plan (AQE unwrapped), so a persist()
+    * cannot hide a sub-plan. Each distinct cached plan is one extra root
+    * (identity-dedup — a self-join over one cache must not double the
+    * counts taken over the roots). */
+  private[graft] def auditRoots(plan: SparkPlan): Seq[SparkPlan] = {
     val seenCached = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
     val roots = scala.collection.mutable.ArrayBuffer[SparkPlan]()
@@ -99,6 +98,13 @@ object PlanSmells {
       }.foreach(cp => if (seenCached.add(cp)) addRoot(cp))
     }
     addRoot(plan)
+    roots.toSeq
+  }
+
+  /** Smell stats of one physical plan over its [[auditRoots]] (exposed
+    * so the gate spec can prove the detector on a planted regression). */
+  private[graft] def smellsOfPlan(plan: SparkPlan): Smells = {
+    val roots = auditRoots(plan)
     var sortAggs, hashAggs, objAggs = 0
     val fallbacks = scala.collection.mutable.SortedSet[String]()
     var maxTree = 0

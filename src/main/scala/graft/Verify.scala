@@ -142,14 +142,6 @@ object Verify {
     // centroids) assert the pinned regime holds and fail LOUDLY here
     // instead of silently hash-mismatching against a diverged oracle
     System.setProperty("graft.oracle.run", "true")
-    // grade the tree family's SCALE branch (r17, verdict item 5): the
-    // cell-statistics path only engages above TreeCellsMinRows rows, so
-    // at the oracle SFs the driver would never grade the code that runs
-    // at 100 TB. Forcing it here makes the DuckDB compare cover the
-    // cells branch; LearnSpec pins cells ≡ per-row independently, and
-    // the branches are row-identical, so hashes are unchanged.
-    if (!sys.props.contains("graft.tree.cells"))
-      System.setProperty("graft.tree.cells", "force")
     // optional extra args: restrict to the named queries (dev iteration);
     // the driver always passes exactly (sfDir, outDir) → full run
     val only = args.drop(2).toSet

@@ -209,12 +209,15 @@ object Learn extends QueryModule {
   // (airflow/dags/realestate_pipeline.py:224-234: sklearn
   // RandomForestRegressor + r² on a toPandas'd frame). Engine-side, a
   // histogram tree is the LightGBM/XGBoost-hist shape: bin the features
-  // once, then each LEVEL of the tree is ONE scan producing the
+  // once, then each LEVEL of the tree is ONE aggregation producing the
   // (node, feature, bin) → (count, Σy) sufficient statistics — a few-KB
   // frame — from which every node's best variance-reduction split is
-  // picked with window sums over bins. No per-split scan, no driver-side
-  // data: the model state that crosses levels is the broadcastable
-  // best-split row, exactly like the centroid/weight rows above.
+  // picked with window sums over bins. Engine-side those aggregations
+  // read per-cell statistics (cellStats), so each query scans the data
+  // once; the DuckDB oracle replays the per-row form. No per-split
+  // scan, no driver-side data: the model state that crosses levels is
+  // the broadcastable best-split row, exactly like the centroid/weight
+  // rows above.
   //
   // Determinism: bins and the target are exact integers, so the
   // histogram sums are exact BIGINTs; the split score
@@ -241,54 +244,38 @@ object Learn extends QueryModule {
            CAST(round(o_totalprice * 100) AS BIGINT) AS y
     FROM orders"""
 
-  /** One histogram pass: ONE scan of the feature frame, features
-    * unpivoted in-flight (explode of a 2-struct array — rows double in
-    * the map stage, then combine to ≤ |nodes|·2·TreeBins groups), one
-    * map-side-combined aggregation. This is the per-level cost of the
-    * whole tree at any depth; visible to LearnSpec for the plan pin. */
-  private[graft] def histPass(f: DataFrame, nodeCols: Seq[String])
-      : DataFrame =
-    f.select(nodeCols.map(col) ++ Seq(
-        explode(array(
-          struct(lit(1L).as("feat"), col("b1").as("bin")),
-          struct(lit(2L).as("feat"), col("b2").as("bin")))).as("e"),
-        col("y")): _*)
-      .select(nodeCols.map(col) ++ Seq(col("e.feat").as("feat"),
-        col("e.bin").as("bin"), col("y")): _*)
-      .groupBy((nodeCols ++ Seq("feat", "bin")).map(col): _*)
-      .agg(count(lit(1)).as("n"), sum("y").as("sy"))
-
-  /** One-scan sufficient statistics per feature cell (round-16
-    * optimization). Every prediction a fixed-depth stump/tree/forest in
-    * this family makes is CONSTANT on a (b1, b2) cell — all splits test
-    * b1/b2 against thresholds — so every histogram pass, leaf mean,
-    * residual update and squared-error sum the training/eval chain
-    * needs is exactly derivable from (n, Σy, Σy²) per cell:
+  /** One-scan sufficient statistics per feature cell. Every prediction
+    * a fixed-depth stump/tree/forest in this family makes is CONSTANT on
+    * a (b1, b2) cell — all splits test b1/b2 against thresholds — so
+    * every histogram pass, leaf mean, residual update and squared-error
+    * sum the training/eval chain needs is exactly derivable from
+    * (n, Σy, Σy²) per cell:
     *
     *   hist(feat, bin)   = Σ_cells (cn, csy) grouped by the feat's bin
     *   residual csy      = csy − cn·P(cell)
     *   residual csyy     = csyy − 2·P·csy + cn·P²     (all integers)
     *   SSE               = Σ_cells residual csyy
     *
-    * One scan + a ≤ TreeBins² (+extra-key factor) row frame replaces
-    * one full scan per histogram level, per boosting round, and per
-    * eval pass (guide §1.2: remove passes — ml_gbt_stumps went from 4
-    * scans to 1, ml_forest_bagged from 7 to 1). The map-side combine
-    * keeps aggregate state bounded by the cell count at any corpus
-    * size; extra keys (bag id, train/test flag) ride as additional
-    * cell coordinates. Σy² accumulates in DECIMAL(38,0) — the exact
-    * integer discipline the per-row eval already used — so every
-    * derived figure is bit-identical to the per-row computation the
-    * DuckDB oracle replays. */
+    * So each query in the family scans the data ONCE, here, into a
+    * ≤ TreeBins² (×extra-key factor) row frame; every histogram level,
+    * boosting round and eval pass runs on that frame (guide §1.2:
+    * remove passes). The map-side combine keeps aggregate state bounded
+    * by the cell count at any corpus size; extra keys (bag id,
+    * train/test flag) ride as additional cell coordinates. Σy²
+    * accumulates in DECIMAL(38,0), so every derived figure is
+    * bit-identical to the per-row computation the DuckDB oracle
+    * replays. */
   private def cellStats(f: DataFrame, extraKeys: Seq[String]): DataFrame =
     f.groupBy((extraKeys ++ Seq("b1", "b2")).map(col): _*)
       .agg(count(lit(1)).as("cn"), sum("y").as("csy"),
         expr("sum(CAST(y AS DECIMAL(38,0)) * y)").as("csyy"))
       .persist()
 
-  /** [[histPass]] over a cell-stats frame: same (nodeCols, feat, bin,
-    * n, sy) output, weighted by cell counts instead of row counts. */
-  private def histPassCells(cells: DataFrame, nodeCols: Seq[String])
+  /** One histogram pass over a cell-stats frame: features unpivoted
+    * in-flight (explode of a 2-struct array), then one aggregation to
+    * (nodeCols, feat, bin) → (n, sy), weighted by cell counts. The
+    * output has ≤ |nodes|·2·TreeBins rows at any corpus size. */
+  private def histPass(cells: DataFrame, nodeCols: Seq[String])
       : DataFrame =
     cells.select(nodeCols.map(col) ++ Seq(
         explode(array(
@@ -353,25 +340,19 @@ object Learn extends QueryModule {
         FROM $h))
     WHERE nl > 0 AND nr > 0"""
 
-  /** Learn the depth-2 tree: (root split, level-1 histogram, per-node
-    * child splits). The tiny frames are persisted because two consumers
-    * each would otherwise re-run the big scan behind them (Verify/Bench
-    * clearCache between queries). Big-table scans: one per level. */
-  private def treeLevels(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    if (useCellsPath(s, dir))
-      treeLevelsFromCells(cellStats(treeFeatures(s, dir), Nil))
-    else treeLevelsFrom(treeFeatures(s, dir))
-
-  /** Depth-2 levels per-row (one scan per level) — the sub-threshold
-    * branch; see [[TreeCellsMinRows]]. */
-  private def treeLevelsFrom(f: DataFrame)
+  /** Learn the depth-2 tree from a cell-stats frame: (root split,
+    * level-1 histogram, per-node child splits). Both histogram passes
+    * are tiny cell-frame aggregates; the data is scanned once, by
+    * cellStats. The tiny frames are persisted because two consumers
+    * each would otherwise re-run the chain behind them (Verify/Bench
+    * clearCache between queries). */
+  private def treeLevels(cells: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val best0 = treeSplits(histPass(f, Nil), Seq("feat"))
+    val best0 = treeSplits(histPass(cells, Nil), Seq("feat"))
       .orderBy(desc("score"), col("feat"), col("bin")).limit(1)
       .select(col("feat").as("root_feat"), col("bin").as("root_thr"))
       .persist()
-    val assigned = f.crossJoin(broadcast(best0))
+    val assigned = cells.crossJoin(broadcast(best0))
       .withColumn("node", expr(
         "CAST(CASE WHEN (root_feat = 1 AND b1 <= root_thr) " +
           "OR (root_feat = 2 AND b2 <= root_thr) " +
@@ -388,38 +369,12 @@ object Learn extends QueryModule {
     (best0, h1, best1)
   }
 
-  /** Depth-2 levels from a cell-stats frame: the same best0/h1/best1
-    * chain as the per-row form, but both histogram "passes" are tiny
-    * cell-frame aggregates — the data is scanned once, by cellStats. */
-  private def treeLevelsFromCells(cells: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val best0 = treeSplits(histPassCells(cells, Nil), Seq("feat"))
-      .orderBy(desc("score"), col("feat"), col("bin")).limit(1)
-      .select(col("feat").as("root_feat"), col("bin").as("root_thr"))
-      .persist()
-    val assigned = cells.crossJoin(broadcast(best0))
-      .withColumn("node", expr(
-        "CAST(CASE WHEN (root_feat = 1 AND b1 <= root_thr) " +
-          "OR (root_feat = 2 AND b2 <= root_thr) " +
-          "THEN 0 ELSE 1 END AS BIGINT)"))
-    val h1 = histPassCells(assigned, Seq("node")).persist()
-    val best1 = treeSplits(h1, Seq("node", "feat"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("node")
-          .orderBy(desc("score"), col("feat"), col("bin"))))
-      .filter(col("rn") === 1)
-      .select(col("node"), col("feat").as("split_feat"),
-        col("bin").as("split_thr"))
-      .persist()
-    (best0, h1, best1)
-  }
-
   /** Apply a learned tree to `f`, appending the integer-cents
     * prediction as `out` and keeping f's columns: three broadcast
     * layers (root split row, per-node child splits, 4-row leaf means)
-    * over whatever scan feeds `f` — chaining B trees stacks B
-    * broadcast-join layers on ONE pass of the data, which is how a
-    * forest scores at 100 TB (never one scan per tree). */
+    * over `f`, a cell-stats frame — chaining B trees stacks B
+    * broadcast-join layers on ONE pass over it, which is how a forest
+    * scores at 100 TB (never one pass per tree). */
   private def treeApply(f: DataFrame,
       model: (DataFrame, DataFrame, DataFrame), out: String): DataFrame = {
     val (best0, h1, best1) = model
@@ -459,61 +414,13 @@ object Learn extends QueryModule {
       JOIN (SELECT leaf, sy // n AS p FROM ${p}leaves) pr
         USING (leaf))"""
 
-  /** Depth-1 fit (a stump): root split + the two side means, both
-    * partial sums of the SAME level-0 histogram — one scan per stump.
-    * The value column is whatever `f.y` holds, which is how boosting
-    * reuses this: round k fits the integer residuals of round k-1. */
-  /** Row-count threshold above which the multi-scan tree/stump bodies
-    * switch to the one-scan cell-stats path (round-16 optimization,
-    * measured on replicated-orders corpora, min-of-paired-reps A/B vs
-    * the per-row bodies):
-    *
-    *   150k rows (sf0.1): cells 1.1–1.3× SLOWER — the family is
-    *     job-latency-bound locally and the cell frame only adds a
-    *     cache-fill job;
-    *   1.5M rows (10×):   wash (0.98–1.15×);
-    *   15M rows (100×):   cells 0.75–0.92× — the scan passes dominate
-    *     and one scan replaces 4 (gbt) / 7 (forest).
-    *
-    * The ratio keeps falling with N (pass count is the asymptote), so
-    * the cells path is the 100 TB plan; the threshold sits past the
-    * measured wash point. Both branches are pinned row-identical in
-    * LearnSpec. */
-  private[graft] val TreeCellsMinRows = 4000000L
-  /** Size-adaptive branch pick, overridable via -Dgraft.tree.cells=
-    * force|off (r17): Verify forces the CELLS branch so the DuckDB
-    * oracle grades the code path that actually runs at 100 TB — at the
-    * oracle SFs the row count is far below the threshold and the
-    * driver would otherwise only ever measure the per-row path.
-    * LearnSpec pins both branches row-identical independently. */
-  private def useCellsPath(s: SparkSession, dir: String): Boolean =
-    sys.props.get("graft.tree.cells") match {
-      case Some("force") => true
-      case Some("off") => false
-      case _ =>
-        Tables.footerRowCount(s, s"$dir/orders.parquet") > TreeCellsMinRows
-    }
-
-  private def stumpFit(f: DataFrame): DataFrame =
-    stumpFitFromHist(histPass(f, Nil))
-
-  /** Row-local stump prediction from the broadcast 1-row model. */
-  private def stumpApply(f: DataFrame, model: DataFrame,
-      out: String): DataFrame = {
-    val inCols = f.columns.map(col)
-    f.crossJoin(broadcast(model))
-      .withColumn(out, expr(
-        "CASE WHEN (sfeat = 1 AND b1 <= sthr) OR (sfeat = 2 AND b2 <= sthr) " +
-          "THEN pl ELSE pr END"))
-      .select(inCols :+ col(out): _*)
-  }
-
-  /** Depth-1 fit from a cell-stats frame — no data scan. */
-  private def stumpFitCells(cells: DataFrame): DataFrame =
-    stumpFitFromHist(histPassCells(cells, Nil))
-
-  private def stumpFitFromHist(hist: DataFrame): DataFrame = {
-    val h0 = hist.persist()
+  /** Depth-1 fit (a stump) from a cell-stats frame — no data scan: the
+    * root split and the two side means, both partial sums of the SAME
+    * level-0 histogram. The value column is whatever the cells' csy
+    * holds, which is how boosting reuses this: round k fits the integer
+    * residuals of round k-1 ([[residCells]]). */
+  private def stumpFit(cells: DataFrame): DataFrame = {
+    val h0 = histPass(cells, Nil).persist()
     val best0 = treeSplits(h0, Seq("feat"))
       .orderBy(desc("score"), col("feat"), col("bin")).limit(1)
       .select(col("feat").as("sfeat"), col("bin").as("sthr"))
@@ -642,76 +549,40 @@ object Learn extends QueryModule {
             FROM scored s JOIN preds p USING (leaf)))
     SELECT CAST(n AS BIGINT) AS n, $treeR2Text FROM ev"""
 
-  private[graft] def treeR2Row(s: SparkSession, dir: String): DataFrame =
-    treeR2RowOf(s, dir, useCellsPath(s, dir))
+  /** (n, sse, sy, syy) of a per-cell prediction column `p`: the SSE
+    * expands exactly from (cn, csy, csyy), as in [[residCells]]. */
+  private def cellsEval(scored: DataFrame, p: String): DataFrame =
+    scored.agg(expr("sum(cn)").as("n"),
+      expr(s"sum(csyy - 2 * CAST($p AS DECIMAL(38,0)) * csy + " +
+        s"CAST(cn AS DECIMAL(38,0)) * $p * $p)").as("sse"),
+      expr("sum(CAST(csy AS DECIMAL(38,0)))").as("sy"),
+      sum("csyy").as("syy"))
 
-  /** Depth-2 tree train + eval r², both regimes (see
-    * [[TreeCellsMinRows]]); row-identical branches, pinned in
-    * LearnSpec. */
-  private[graft] def treeR2RowOf(s: SparkSession, dir: String,
-      useCells: Boolean): DataFrame =
-    if (useCells) {
-      // one data scan (cellStats); scoring + SSE derived on the cells
-      val cells = cellStats(treeFeatures(s, dir), Nil)
-      val model = treeLevelsFromCells(cells)
-      treeApply(cells, model, "p")
-        .agg(expr("sum(cn)").as("n"),
-          expr("sum(csyy - 2 * CAST(p AS DECIMAL(38,0)) * csy + " +
-            "CAST(cn AS DECIMAL(38,0)) * p * p)").as("sse"),
-          expr("sum(CAST(csy AS DECIMAL(38,0)))").as("sy"),
-          sum("csyy").as("syy"))
-        .selectExpr("CAST(n AS BIGINT) AS n", treeR2Text)
-    } else {
-      val model = treeLevelsFrom(treeFeatures(s, dir))
-      treeApply(treeFeatures(s, dir), model, "p")
-        .withColumn("e", col("y") - col("p"))
-        .agg(count(lit(1)).as("n"),
-          expr("sum(CAST(e * e AS DECIMAL(38,0)))").as("sse"),
-          expr("sum(CAST(y AS DECIMAL(38,0)))").as("sy"),
-          expr("sum(CAST(y AS DECIMAL(38,0)) * y)").as("syy"))
-        .selectExpr("CAST(n AS BIGINT) AS n", treeR2Text)
+  /** Depth-2 tree train + eval r² (ml_tree_r2, and the tree run that
+    * ml_runs_log logs): one data scan (cellStats); the tree's scoring
+    * and SSE are derived on the cells. */
+  private def treeR2Row(s: SparkSession, dir: String): DataFrame = {
+    val cells = cellStats(treeFeatures(s, dir), Nil)
+    cellsEval(treeApply(cells, treeLevels(cells), "p"), "p")
+      .selectExpr("CAST(n AS BIGINT) AS n", treeR2Text)
+  }
+
+  /** ml_forest_bagged body: one cell-stats scan with the bag as a cell
+    * coordinate; each tree trains on its bag's cells, and the ensemble
+    * SSE expands exactly from (cn, csy, csyy) because the averaged
+    * prediction is constant per (b1, b2) cell. */
+  private def forestRow(s: SparkSession, dir: String): DataFrame = {
+    val cellsB = cellStats(
+      treeFeatures(s, dir).withColumn("bag", col("k") % 3), Seq("bag"))
+    val models =
+      (0 to 2).map(b => treeLevels(cellsB.filter(col("bag") === b)))
+    val allCells = cellsB.groupBy("b1", "b2")
+      .agg(sum("cn").as("cn"), sum("csy").as("csy"), sum("csyy").as("csyy"))
+    val scored = models.zipWithIndex.foldLeft(allCells) {
+      case (acc, (m, i)) => treeApply(acc, m, s"p$i")
     }
-
-  /** ml_forest_bagged body, both regimes (see [[TreeCellsMinRows]]):
-    * per-row below the threshold (6 histogram scans + 1 scoring scan),
-    * one-scan cell stats above — bag rides as a cell coordinate and the
-    * ensemble SSE expands exactly from (cn, csy, csyy) because the
-    * averaged prediction is constant per (b1, b2) cell. Row-identical
-    * branches, pinned in LearnSpec. */
-  private[graft] def forestRow(s: SparkSession, dir: String,
-      cells: Boolean): DataFrame = {
-    val (models, ev) =
-      if (cells) {
-        val cellsB = cellStats(
-          treeFeatures(s, dir).withColumn("bag", col("k") % 3), Seq("bag"))
-        val ms = (0 to 2).map(b =>
-          treeLevelsFromCells(cellsB.filter(col("bag") === b)))
-        val allCells = cellsB.groupBy("b1", "b2")
-          .agg(sum("cn").as("cn"), sum("csy").as("csy"),
-            sum("csyy").as("csyy"))
-        val scored = ms.zipWithIndex.foldLeft(allCells) {
-          case (acc, (m, i)) => treeApply(acc, m, s"p$i")
-        }
-        (ms, scored
-          .withColumn("P", expr("(p0 + p1 + p2) DIV 3"))
-          .agg(expr("sum(cn)").as("n"),
-            expr("sum(csyy - 2 * CAST(P AS DECIMAL(38,0)) * csy + " +
-              "CAST(cn AS DECIMAL(38,0)) * P * P)").as("sse"),
-            expr("sum(CAST(csy AS DECIMAL(38,0)))").as("sy"),
-            sum("csyy").as("syy")))
-      } else {
-        val f = treeFeatures(s, dir)
-        val ms = (0 to 2).map(b => treeLevelsFrom(f.filter(col("k") % 3 === b)))
-        val scored = ms.zipWithIndex.foldLeft(f) {
-          case (acc, (m, i)) => treeApply(acc, m, s"p$i")
-        }
-        (ms, scored
-          .withColumn("e", col("y") - expr("(p0 + p1 + p2) DIV 3"))
-          .agg(count(lit(1)).as("n"),
-            expr("sum(CAST(e * e AS DECIMAL(38,0)))").as("sse"),
-            expr("sum(CAST(y AS DECIMAL(38,0)))").as("sy"),
-            expr("sum(CAST(y AS DECIMAL(38,0)) * y)").as("syy")))
-      }
+    val ev = cellsEval(
+      scored.withColumn("P", expr("(p0 + p1 + p2) DIV 3")), "P")
     val roots = models.zipWithIndex.map { case ((best0, _, _), i) =>
       broadcast(best0.select(col("root_feat").as(s"rf$i"),
         col("root_thr").as(s"rt$i")))
@@ -724,44 +595,22 @@ object Learn extends QueryModule {
         treeR2Text): _*)
   }
 
-  /** ml_gbt_stumps body, both regimes (see [[TreeCellsMinRows]]): the
-    * 3-round boosting chain per-row (one histogram scan per round + one
-    * eval scan) or on the cell frame (the residual csy/csyy updates are
-    * exact integer identities; y0 statistics ride the chain untouched).
-    * Row-identical branches, pinned in LearnSpec. */
-  private[graft] def gbtRow(s: SparkSession, dir: String,
-      cells: Boolean): DataFrame = {
-    val (ms, ev) =
-      if (cells) {
-        val cells0 = cellStats(treeFeatures(s, dir), Nil)
-          .withColumn("csy0", col("csy")).withColumn("csyy0", col("csyy"))
-        val m0 = stumpFitCells(cells0)
-        val cells1 = residCells(cells0, m0)
-        val m1 = stumpFitCells(cells1)
-        val cells2 = residCells(cells1, m1)
-        val m2 = stumpFitCells(cells2)
-        val cells3 = residCells(cells2, m2)
-        (Seq(m0, m1, m2), cells3.agg(expr("sum(cn)").as("n"),
-          sum("csyy").as("sse"),
-          expr("sum(CAST(csy0 AS DECIMAL(38,0)))").as("sy"),
-          sum("csyy0").as("syy")))
-      } else {
-        def resid(f: DataFrame, m: DataFrame): DataFrame =
-          stumpApply(f, m, "__p")
-            .withColumn("y", col("y") - col("__p")).drop("__p")
-        val f0 = treeFeatures(s, dir).withColumn("y0", col("y"))
-        val m0 = stumpFit(f0)
-        val f1 = resid(f0, m0)
-        val m1 = stumpFit(f1)
-        val f2 = resid(f1, m1)
-        val m2 = stumpFit(f2)
-        val f3 = resid(f2, m2)
-        (Seq(m0, m1, m2), f3.agg(count(lit(1)).as("n"),
-          expr("sum(CAST(y AS DECIMAL(38,0)) * y)").as("sse"),
-          expr("sum(CAST(y0 AS DECIMAL(38,0)))").as("sy"),
-          expr("sum(CAST(y0 AS DECIMAL(38,0)) * y0)").as("syy")))
-      }
-    val models = ms.zipWithIndex.map { case (m, i) =>
+  /** ml_gbt_stumps body: the 3-round boosting chain on the cell frame.
+    * The residual csy/csyy updates are exact integer identities, and
+    * the y0 statistics ride the chain untouched for the r² total. */
+  private def gbtRow(s: SparkSession, dir: String): DataFrame = {
+    val cells0 = cellStats(treeFeatures(s, dir), Nil)
+      .withColumn("csy0", col("csy")).withColumn("csyy0", col("csyy"))
+    val m0 = stumpFit(cells0)
+    val cells1 = residCells(cells0, m0)
+    val m1 = stumpFit(cells1)
+    val cells2 = residCells(cells1, m1)
+    val m2 = stumpFit(cells2)
+    val ev = residCells(cells2, m2).agg(expr("sum(cn)").as("n"),
+      sum("csyy").as("sse"),
+      expr("sum(CAST(csy0 AS DECIMAL(38,0)))").as("sy"),
+      sum("csyy0").as("syy"))
+    val models = Seq(m0, m1, m2).zipWithIndex.map { case (m, i) =>
       broadcast(m.select(col("sfeat").as(s"sf$i"),
         col("sthr").as(s"st$i"), col("pl").as(s"pl$i"),
         col("pr").as(s"pr$i")))
@@ -774,53 +623,32 @@ object Learn extends QueryModule {
         :+ treeR2Text: _*)
   }
 
-  /** pipeline_model_eval body, both regimes (see [[TreeCellsMinRows]]):
-    * per-row train-fit + holdout-scoring scans, or one cell-stats pass
-    * with the train/test flag as a cell coordinate. Row-identical
-    * branches, pinned in LearnSpec. */
-  private[graft] def modelEvalRow(s: SparkSession, dir: String,
-      cells: Boolean): DataFrame = {
+  /** pipeline_model_eval body: one cell-stats pass with the train/test
+    * flag as a cell coordinate; the stump fits on the train cells, and
+    * the holdout SSE is the test cells' residual Σy². */
+  private def modelEvalRow(s: SparkSession, dir: String): DataFrame = {
     val inTrain =
       "substr(md5(CAST(k AS STRING) || ':spl'), 1, 1) < 'd'"
-    if (cells) {
-      val cs = cellStats(
-        treeFeatures(s, dir).withColumn("tr", expr(inTrain)), Seq("tr"))
-      val m = stumpFitCells(cs.filter(col("tr")).drop("tr"))
-      val ev = residCells(
-          cs.withColumn("csy0", col("csy"))
-            .withColumn("csyy0", col("csyy")), m)
-        .agg(expr("sum(CASE WHEN tr THEN cn ELSE 0 END)").as("n_train"),
-          expr("sum(CASE WHEN tr THEN 0 ELSE cn END)").as("n"),
-          expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
-            "ELSE csyy END)").as("sse"),
-          expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
-            "ELSE CAST(csy0 AS DECIMAL(38,0)) END)").as("sy"),
-          expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
-            "ELSE csyy0 END)").as("syy"))
-      ev.crossJoin(broadcast(m))
-        .selectExpr("CAST(n_train AS BIGINT) AS n_train",
-          "CAST(n AS BIGINT) AS n_test",
-          "CAST(sfeat AS BIGINT) AS sfeat", "CAST(sthr AS BIGINT) AS sthr",
-          "CAST(pl AS BIGINT) AS pl", "CAST(pr AS BIGINT) AS pr",
-          treeR2Text)
-    } else {
-      val f = treeFeatures(s, dir)
-      val train = f.filter(expr(inTrain))
-      val test = f.filter(not(expr(inTrain)))
-      val m = stumpFit(train)
-      val scored = stumpApply(test, m, "p")
-      val ev = scored.agg(count(lit(1)).as("n"),
-        expr("sum(CAST(y - p AS DECIMAL(38,0)) * (y - p))").as("sse"),
-        expr("sum(CAST(y AS DECIMAL(38,0)))").as("sy"),
-        expr("sum(CAST(y AS DECIMAL(38,0)) * y)").as("syy"))
-      val tr = train.agg(count(lit(1)).as("n_train"))
-      ev.crossJoin(broadcast(m)).crossJoin(broadcast(tr))
-        .selectExpr("CAST(n_train AS BIGINT) AS n_train",
-          "CAST(n AS BIGINT) AS n_test",
-          "CAST(sfeat AS BIGINT) AS sfeat", "CAST(sthr AS BIGINT) AS sthr",
-          "CAST(pl AS BIGINT) AS pl", "CAST(pr AS BIGINT) AS pr",
-          treeR2Text)
-    }
+    val cs = cellStats(
+      treeFeatures(s, dir).withColumn("tr", expr(inTrain)), Seq("tr"))
+    val m = stumpFit(cs.filter(col("tr")).drop("tr"))
+    val ev = residCells(
+        cs.withColumn("csy0", col("csy"))
+          .withColumn("csyy0", col("csyy")), m)
+      .agg(expr("sum(CASE WHEN tr THEN cn ELSE 0 END)").as("n_train"),
+        expr("sum(CASE WHEN tr THEN 0 ELSE cn END)").as("n"),
+        expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
+          "ELSE csyy END)").as("sse"),
+        expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
+          "ELSE CAST(csy0 AS DECIMAL(38,0)) END)").as("sy"),
+        expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
+          "ELSE csyy0 END)").as("syy"))
+    ev.crossJoin(broadcast(m))
+      .selectExpr("CAST(n_train AS BIGINT) AS n_train",
+        "CAST(n AS BIGINT) AS n_test",
+        "CAST(sfeat AS BIGINT) AS sfeat", "CAST(sthr AS BIGINT) AS sthr",
+        "CAST(pl AS BIGINT) AS pl", "CAST(pr AS BIGINT) AS pr",
+        treeR2Text)
   }
 
   // shared expression text for the one-scan 3-fold CV (see the query's
@@ -1030,9 +858,9 @@ object Learn extends QueryModule {
     // the learned model — each leaf with the full split path that
     // defines it plus its (n, mean-cents prediction) — so the green
     // hash row proves both engines learned the identical tree, not just
-    // similar aggregates. Scale shape (see block scaladoc): one scan
-    // per level; split selection runs over the few-KB histogram, never
-    // the data. ----
+    // similar aggregates. Scale shape (see cellStats): one scan of the
+    // data; both levels and the split selection run over the few-KB
+    // cell and histogram frames, never the data. ----
     Q(
       "ml_tree_hist_depth2",
       Some(s"""
@@ -1047,7 +875,8 @@ object Learn extends QueryModule {
         FROM leaves CROSS JOIN best0
         ORDER BY leaf"""),
       (s, dir) => {
-        val (best0, h1, best1) = treeLevels(s, dir)
+        val (best0, h1, best1) =
+          treeLevels(cellStats(treeFeatures(s, dir), Nil))
         treeLeaves(best0, h1, best1)
           .selectExpr("leaf", "root_feat", "root_thr",
             "split_feat", "split_thr", "n",
@@ -1056,8 +885,8 @@ object Learn extends QueryModule {
       }),
 
     // ---- tree EVAL: apply the learned tree and compute r² engine-side
-    // (the reference's metric, realestate_pipeline.py:234) in ONE more
-    // scan. Leaf predictions are floored to integer cents (sy DIV n) so
+    // (the reference's metric, realestate_pipeline.py:234) on the same
+    // cell frame the tree trains on. Leaf predictions are floored to integer cents (sy DIV n) so
     // the residuals — and therefore the SSE — are exact integers under
     // DECIMAL(38,0)/HUGEINT accumulation: associative, order-free,
     // bit-identical across engines; only the final r² division runs in
@@ -1065,16 +894,16 @@ object Learn extends QueryModule {
     Q(
       "ml_tree_r2",
       Some(treeR2Sql),
-      (s, dir) => treeR2Row(s, dir)),
+      treeR2Row),
 
     // ---- bagged forest: the reference's LITERAL model family
     // (RandomForestRegressor, realestate_pipeline.py:224-233) as three
     // depth-2 histogram trees on disjoint deterministic bags
     // (k % 3 — reproducible bootstrap stand-in), averaged by integer
-    // division. Train: 3 bags × 2 levels = 6 histogram passes, each a
-    // bag-sized scan + few-KB aggregate. Score: ONE pass over the data
-    // through three stacked broadcast layers (treeApply) — a forest
-    // never scans once per tree. Output pins the three root splits
+    // division. ONE scan builds per-(bag, cell) statistics; train runs
+    // 3 bags × 2 levels = 6 histogram passes over that frame, and
+    // scoring applies three stacked broadcast layers (treeApply) to
+    // the bag-summed cells — a forest never scans once per tree. Output pins the three root splits
     // (structure diversity across bags) and the ensemble r²; every
     // number integer-exact or shared-text, so the row hash proves both
     // engines learned the identical forest. ----
@@ -1109,7 +938,7 @@ object Learn extends QueryModule {
                CAST(t2best0.root_thr AS BIGINT) AS rt2,
                $treeR2Text
         FROM ev CROSS JOIN t0best0 CROSS JOIN t1best0 CROSS JOIN t2best0"""),
-      (s, dir) => forestRow(s, dir, useCellsPath(s, dir))),
+      forestRow),
 
     // ---- 3-fold cross-validation of a linear model from ONE scan: the
     // model-selection loop every real pipeline runs, in the shape it
@@ -1193,10 +1022,11 @@ object Learn extends QueryModule {
     // fits a depth-1 stump to the previous round's residuals; integer-
     // cents leaf values keep every residual an exact integer, so the
     // whole 3-round chain is deterministic and the final residual frame
-    // IS the model's training error (SSE = Σ residual²). Cost: one
-    // histogram scan per round + one eval scan, with the 1-row stump
-    // models broadcast between rounds — boosting at 100 TB is k scans,
-    // never k shuffles of the data. Output pins all three stumps (feat,
+    // IS the model's training error (SSE = Σ residual²). Cost: ONE
+    // scan to per-cell statistics; each round's histogram and residual
+    // update run on that frame with the 1-row stump models broadcast
+    // between rounds — boosting at 100 TB is one scan, never k scans
+    // or k shuffles of the data. Output pins all three stumps (feat,
     // thr, side values) + train r² in one hashed row. ----
     Q(
       "ml_gbt_stumps",
@@ -1220,7 +1050,7 @@ object Learn extends QueryModule {
                CAST(g2m.pl AS BIGINT) AS pl2, CAST(g2m.pr AS BIGINT) AS pr2,
                $treeR2Text
         FROM ev CROSS JOIN g0m CROSS JOIN g1m CROSS JOIN g2m"""),
-      (s, dir) => gbtRow(s, dir, useCellsPath(s, dir))),
+      gbtRow),
 
     // ---- exact AUC (Mann-Whitney rank-sum) of price-as-a-classifier
     // for high order priority — the reference evaluates models
@@ -1428,9 +1258,10 @@ object Learn extends QueryModule {
     // deterministic-split discipline as gold_train_test_split), a
     // depth-1 histogram stump fits on the TRAIN side only, and the
     // holdout r² comes from exact integer sufficient statistics of the
-    // TEST side — the model never sees it. One histogram scan to fit,
-    // one scoring scan to evaluate, 1-row broadcast model between
-    // them; nothing is collected. This is the capability the
+    // TEST side — the model never sees it. ONE scan to per-cell
+    // statistics keyed by the split flag; the fit reads the train
+    // cells, the eval the test cells, with the 1-row broadcast model
+    // between them; nothing is collected. This is the capability the
     // reference's sklearn train_test_split+fit+score cell exercises
     // (airflow/dags/realestate_pipeline.py:224-234), as distributed
     // aggregation. ----
@@ -1462,7 +1293,7 @@ object Learn extends QueryModule {
                CAST(gm.pl AS BIGINT) AS pl, CAST(gm.pr AS BIGINT) AS pr,
                $treeR2Text
         FROM ev CROSS JOIN gm CROSS JOIN tr"""),
-      (s, dir) => modelEvalRow(s, dir, useCellsPath(s, dir))),
+      modelEvalRow),
 
     // ---- chi-squared test of independence between two categorical
     // columns (order priority × status): the feature-association screen

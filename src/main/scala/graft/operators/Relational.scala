@@ -629,7 +629,7 @@ object Relational extends QueryModule {
           // replaces round-10's min/max spread guard — two extra
           // O(frame) sliding-window aggregates that an in-session A/B
           // measured at a consistent 1.23× on the whole query
-          // (AB_ZSCORE_r11.json; ABZscore3.scala) — AND the float
+          // (AB_ZSCORE_r11.json) — AND the float
           // `> 0` test, whose cancellation hole (tiny true variance
           // rounding to ≤ 0) an exact integer test cannot have. The
           // division consumes CAST(num AS DOUBLE): num ≥ 1 when the

@@ -67,51 +67,48 @@ class LearnSpec extends SparkSpec {
     assert(st.getDouble(2) == 0.0 && st.getDouble(3) == 1.0)
   }
 
-  test("cells and per-row tree bodies are row-identical (both regimes)") {
-    // the size-adaptive branch (Learn.TreeCellsMinRows): below the
-    // threshold the registered queries run the per-row bodies; this
-    // pins that the one-scan cell-stats regime — the 100 TB path —
-    // computes the IDENTICAL rows on the oracle fixture, so the oracle
-    // hash transfers to the branch it never executes
-    for ((name, build) <- Seq[
-        (String, (org.apache.spark.sql.SparkSession, String, Boolean) =>
-          org.apache.spark.sql.DataFrame)](
-        ("forest", operators.Learn.forestRow),
-        ("gbt", operators.Learn.gbtRow),
-        ("model_eval", operators.Learn.modelEvalRow),
-        ("tree_r2", operators.Learn.treeR2RowOf))) {
-      val perRow = build(spark, sf, false).collect().map(_.toString).sorted
+  test("tree-family queries return their recorded rows") {
+    // rows recorded at sf0.001 while a per-row body still ran beside the
+    // cell-statistics one; both returned exactly these. Row.toString
+    // prints each double's round-trip form, so equality is bit-exact.
+    val golden = Seq(
+      "ml_tree_hist_depth2" -> Seq(
+        "[0,1,1,2,4,113,2.2044015354E7]",
+        "[1,1,1,2,4,76,2.40288518684E7]",
+        "[2,1,1,2,1,346,2.63061250607E7]",
+        "[3,1,1,2,1,965,2.48969879927E7]"),
+      "ml_tree_r2" -> Seq("[1500,0.005262]"),
+      "ml_forest_bagged" -> Seq("[1500,2,5,1,8,1,1,0.009795]"),
+      "ml_gbt_stumps" -> Seq("[1500,1,1,22842150,25268888,2,1,899175," +
+        "-309393,2,0,-2085787,266604,0.007061]"),
+      "pipeline_model_eval" ->
+        Seq("[1242,258,1,2,23016793,25312961,-0.007787]"))
+    for ((q, want) <- golden) {
+      val got = SparkEntry.queries(q)(spark, sf).collect().map(_.toString)
       spark.catalog.clearCache()
-      val cells = build(spark, sf, true).collect().map(_.toString).sorted
-      spark.catalog.clearCache()
-      assert(perRow.sameElements(cells),
-        s"$name: cells regime diverged:\n per-row ${perRow.mkString("|")}\n cells   ${cells.mkString("|")}")
+      assert(got.toSeq == want, s"$q returned ${got.mkString(" | ")}")
     }
   }
 
-  test("tree histogram pass is ONE scan + one aggregation of the data") {
-    // the per-level cost claim: a histogram pass reads the fact table
-    // exactly once (features unpivot in-flight, no self-union) and
-    // reduces it with a single hash aggregation — at any tree depth
+  test("each tree-family query scans orders ONCE") {
+    // every histogram level, boosting round and eval pass reads the
+    // per-cell statistics; only cellStats reads the table. Scans are
+    // counted over PlanSmells' audit roots, so one hidden under a
+    // persist() still counts.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val f = Tables.load(spark, sf, "orders").selectExpr(
-        "CAST(o_orderkey % 500 AS BIGINT) * 16 DIV 500 AS b1",
-        "CAST(o_custkey % 300 AS BIGINT) * 16 DIV 300 AS b2",
-        "CAST(round(o_totalprice * 100) AS BIGINT) AS y")
-      val plan = operators.Learn.histPass(f, Nil)
-        .queryExecution.executedPlan
-      val scans = plan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      for (q <- Seq("ml_gbt_stumps", "ml_forest_bagged",
+          "pipeline_model_eval", "ml_tree_r2", "ml_tree_hist_depth2")) {
+        val plan = SparkEntry.queries(q)(spark, sf)
+          .queryExecution.executedPlan
+        val scans = PlanSmells.auditRoots(plan).map(_.collectWithSubqueries {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.relation.location.rootPaths
+                .exists(_.getName == "orders.parquet") => s
+        }.size).sum
+        spark.catalog.clearCache()
+        assert(scans == 1, s"$q scans orders $scans times")
       }
-      assert(scans.length == 1,
-        s"histogram pass should scan the table once, saw ${scans.length}")
-      val aggs = plan.collect {
-        case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
-      }
-      // partial + final pair of ONE logical aggregation, nothing more
-      assert(aggs.length == 2,
-        s"expected one partial+final aggregation, saw ${aggs.length}")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

@@ -45,8 +45,8 @@ fi
 AB="AB_r${PREV}_r${ROUND}.json"
 git ls-files --error-unmatch "$AB" >/dev/null 2>&1 \
   || fail "$BENCH is drift-flagged (sentinels_quiet=false) and no committed \
-$AB exists — run tools/ab_r${PREV}_r${ROUND}.sh + its analyzer and commit \
-the result, or regenerate the canonical on a quiet box"
+$AB exists — run a paired A/B (perfbench/ab.py pair) and commit the \
+result as $AB, or regenerate the canonical on a quiet box"
 
 python3 -c "import json; json.load(open('$AB'))" 2>/dev/null \
   || fail "$AB exists but is not parseable JSON"
