@@ -185,7 +185,7 @@ object Bench {
     // it lets cross-round comparison reach every query instead of 43/246.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH_full.json")), json + "\n")
+        "SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")), json + "\n")
     catch { case t: Throwable =>
       System.err.println(s"[bench] could not write BENCH_full.json: $t") }
     spark.stop()

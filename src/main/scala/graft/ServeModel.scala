@@ -45,7 +45,7 @@ object ServeModel {
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) None
       else {
-        val m = spark.read.parquet(s"$root/metrics")
+        val m = operators.RunStore.read(spark, root, "metrics")
           .filter("run_id = 'r1_ols_cents'")
           .collect().map(r => r.getString(1) -> r.getDouble(2)).toMap
         if (Seq("b0", "b1", "b2").forall(m.contains)) Some(m) else None
@@ -62,7 +62,7 @@ object ServeModel {
         s"model registry at $root has no r1_ols_cents b0/b1/b2 metrics " +
           s"even after training via ml_runs_log — check sfDir ($sfDir)"))
     }
-    val algo = spark.read.parquet(s"$root/runs")
+    val algo = operators.RunStore.read(spark, root, "runs")
       .filter("run_id = 'r1_ols_cents'")
       .collect().headOption.map(_.getString(1)).getOrElse("unknown")
     OlsModel("r1_ols_cents", algo, m("b0"), m("b1"), m("b2"))

@@ -12,10 +12,11 @@ import org.apache.spark.sql.types.StructType
   */
 object Tables {
   /** Root for sink-side scratch output (roundtrip writes, stream
-    * checkpoints). Overridable via -Dgraft.scratch so the queries aren't
-    * tied to this container's layout; defaults to the repo's target dir. */
-  def scratchRoot: String =
-    sys.props.getOrElse("graft.scratch", "/root/repo/target/scratch")
+    * checkpoints, the RunStore ledger). Overridable via -Dgraft.scratch;
+    * defaults to `target/scratch` under the working directory, so a
+    * second checkout writes into its own tree. */
+  def scratchRoot: String = sys.props.getOrElse("graft.scratch",
+    new java.io.File("target/scratch").getAbsolutePath)
 
   /** Delete the build-if-absent DERIVED tables under [[scratchRoot]]
     * (the pHash fingerprint table and the ANN hyperplane index). They

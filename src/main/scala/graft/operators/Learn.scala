@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.lang.Math.{addExact, multiplyExact, subtractExact}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.{Q, QueryModule, Tables}
 
 /** The ML train step closed ENGINE-side — the reference fits its model
@@ -35,7 +38,10 @@ import graft.{Q, QueryModule, Tables}
   * aggregation to a k-row (k ≤ 3) or 1-row table, which is then
   * broadcast back for the next pass — no shuffle of the fact table, no
   * driver-side data movement beyond the k-row model state. Iterations
-  * are fixed-count and unrolled into one declarative plan.
+  * are fixed-count and unrolled into one declarative plan. The tree
+  * family is the one exception to "one declarative plan": its single
+  * scan aggregates to ≤ 768 per-cell rows, which the driver collects
+  * and fits on (see cellStats).
   */
 object Learn extends QueryModule {
 
@@ -207,26 +213,25 @@ object Learn extends QueryModule {
   // ---- depth-2 histogram decision tree (regression) ----------------
   // The reference's literal model family is a tree ensemble
   // (airflow/dags/realestate_pipeline.py:224-234: sklearn
-  // RandomForestRegressor + r² on a toPandas'd frame). Engine-side, a
-  // histogram tree is the LightGBM/XGBoost-hist shape: bin the features
-  // once, then each LEVEL of the tree is ONE aggregation producing the
-  // (node, feature, bin) → (count, Σy) sufficient statistics — a few-KB
-  // frame — from which every node's best variance-reduction split is
-  // picked with window sums over bins. Engine-side those aggregations
-  // read per-cell statistics (cellStats), so each query scans the data
-  // once; the DuckDB oracle replays the per-row form. No per-split
-  // scan, no driver-side data: the model state that crosses levels is
-  // the broadcastable best-split row, exactly like the centroid/weight
-  // rows above.
+  // RandomForestRegressor + r² on a toPandas'd frame). A histogram tree
+  // is the LightGBM/XGBoost-hist shape: bin the features once, and every
+  // split then needs only its node's (feature, bin) → (count, Σy)
+  // histogram. Those histograms are partial sums of per-cell statistics
+  // (cellStats), so each query scans the data ONCE, in one aggregation
+  // whose model-sized result is collected, and fits on the driver —
+  // MLlib's own division of labour: executors build histograms, the
+  // driver picks splits. The learner takes any (b1, b2, y) frame. The
+  // DuckDB oracle replays the per-row form in SQL.
   //
-  // Determinism: bins and the target are exact integers, so the
-  // histogram sums are exact BIGINTs; the split score
-  // Σl²/nl + Σr²/nr (maximizing it ≡ minimizing SSE, since Σy² is
-  // constant) is computed in doubles via expression TEXT shared with
-  // the oracle, and argmax ties break by (feat, bin) under a total
-  // ORDER BY — both engines learn the bit-identical tree. (Per-cell Σy
-  // here is < 2^63; at larger scale the sums move to DECIMAL(38,0)
-  // accumulation like the OLS pass.)
+  // Determinism: bins and the target are exact integers, so histogram
+  // sums are exact longs and Σy²/SSE exact BigDecimals (DECIMAL(38,0)
+  // on the Spark side); the split score Σl²/nl + Σr²/nr (maximizing it
+  // ≡ minimizing SSE, since Σy² is constant) is computed in doubles in
+  // treeScoreText's operation order, and argmax ties break by
+  // (feat, bin) like the oracle's total ORDER BY — both engines learn
+  // the bit-identical tree. The final r²/pred arithmetic runs in Spark
+  // over a local model-sized frame, via expression text shared with the
+  // oracle.
 
   private val TreeBins = 16
 
@@ -244,86 +249,84 @@ object Learn extends QueryModule {
            CAST(round(o_totalprice * 100) AS BIGINT) AS y
     FROM orders"""
 
-  /** One-scan sufficient statistics per feature cell. Every prediction
-    * a fixed-depth stump/tree/forest in this family makes is CONSTANT on
-    * a (b1, b2) cell — all splits test b1/b2 against thresholds — so
-    * every histogram pass, leaf mean, residual update and squared-error
-    * sum the training/eval chain needs is exactly derivable from
-    * (n, Σy, Σy²) per cell:
+  /** Sufficient statistics of one feature cell: its extra key (bag id,
+    * train flag; null without one), its bins, and (n, Σy, Σy²). */
+  private[graft] final case class Cell(key: Any, b1: Long, b2: Long,
+      cn: Long, csy: Long, csyy: java.math.BigDecimal)
+
+  /** One scan to per-cell sufficient statistics, collected. Every
+    * prediction a fixed-depth stump/tree/forest in this family makes is
+    * CONSTANT on a (b1, b2) cell — all splits test b1/b2 against
+    * thresholds — so every histogram, leaf mean, residual update and
+    * squared-error sum the training/eval chain needs is exactly
+    * derivable from (n, Σy, Σy²) per cell:
     *
     *   hist(feat, bin)   = Σ_cells (cn, csy) grouped by the feat's bin
     *   residual csy      = csy − cn·P(cell)
     *   residual csyy     = csyy − 2·P·csy + cn·P²     (all integers)
     *   SSE               = Σ_cells residual csyy
     *
-    * So each query in the family scans the data ONCE, here, into a
-    * ≤ TreeBins² (×extra-key factor) row frame; every histogram level,
-    * boosting round and eval pass runs on that frame (guide §1.2:
-    * remove passes). The map-side combine keeps aggregate state bounded
-    * by the cell count at any corpus size; extra keys (bag id,
-    * train/test flag) ride as additional cell coordinates. Σy²
-    * accumulates in DECIMAL(38,0), so every derived figure is
-    * bit-identical to the per-row computation the DuckDB oracle
-    * replays. */
-  private def cellStats(f: DataFrame, extraKeys: Seq[String]): DataFrame =
-    f.groupBy((extraKeys ++ Seq("b1", "b2")).map(col): _*)
+    * The map-side combine bounds the aggregate state by the cell count,
+    * so the result has ≤ TreeBins² (× key values) rows at any corpus
+    * size and comes to the driver in ONE collect; every level, boosting
+    * round and eval pass runs there. `f` has BIGINT b1, b2, y (plus
+    * `key`); Σy² accumulates in DECIMAL(38,0), so every derived figure
+    * is bit-identical to the per-row computation the oracle replays. */
+  private[graft] def cellStats(f: DataFrame, key: Option[String] = None)
+      : Seq[Cell] = {
+    val o = key.size
+    f.groupBy((key.toSeq ++ Seq("b1", "b2")).map(col): _*)
       .agg(count(lit(1)).as("cn"), sum("y").as("csy"),
         expr("sum(CAST(y AS DECIMAL(38,0)) * y)").as("csyy"))
-      .persist()
-
-  /** One histogram pass over a cell-stats frame: features unpivoted
-    * in-flight (explode of a 2-struct array), then one aggregation to
-    * (nodeCols, feat, bin) → (n, sy), weighted by cell counts. The
-    * output has ≤ |nodes|·2·TreeBins rows at any corpus size. */
-  private def histPass(cells: DataFrame, nodeCols: Seq[String])
-      : DataFrame =
-    cells.select(nodeCols.map(col) ++ Seq(
-        explode(array(
-          struct(lit(1L).as("feat"), col("b1").as("bin")),
-          struct(lit(2L).as("feat"), col("b2").as("bin")))).as("e"),
-        col("cn"), col("csy")): _*)
-      .select(nodeCols.map(col) ++ Seq(col("e.feat").as("feat"),
-        col("e.bin").as("bin"), col("cn"), col("csy")): _*)
-      .groupBy((nodeCols ++ Seq("feat", "bin")).map(col): _*)
-      .agg(sum("cn").as("n"), sum("csy").as("sy"))
-
-  /** Apply a fitted stump's per-cell prediction as an exact integer
-    * residual update of the cell statistics (csyy BEFORE csy — the
-    * cross term needs the pre-update Σy). */
-  private def residCells(cells: DataFrame, m: DataFrame): DataFrame = {
-    val keep = cells.columns
-    cells.crossJoin(broadcast(m))
-      .withColumn("__p", expr(
-        "CASE WHEN (sfeat = 1 AND b1 <= sthr) OR (sfeat = 2 AND b2 <= sthr) " +
-          "THEN pl ELSE pr END"))
-      .withColumn("csyy", expr(
-        "csyy - 2 * CAST(__p AS DECIMAL(38,0)) * csy + " +
-          "CAST(cn AS DECIMAL(38,0)) * __p * __p"))
-      .withColumn("csy", col("csy") - col("cn") * col("__p"))
-      .select(keep.map(col): _*)
+      .collect().toSeq.map(r => Cell(if (o == 1) r.get(0) else null,
+        r.getLong(o), r.getLong(o + 1), r.getLong(o + 2), r.getLong(o + 3),
+        r.getDecimal(o + 4)))
   }
 
+  /** A split: feature `feat`'s bin (1 → b1, 2 → b2) `<= thr` goes left. */
+  private[graft] final case class Split(feat: Long, thr: Long) {
+    def left(c: Cell): Boolean =
+      (feat == 1 && c.b1 <= thr) || (feat == 2 && c.b2 <= thr)
+    def side(c: Cell): Long = if (left(c)) 0L else 1L
+  }
+
+  private def plus(a: (Long, Long), b: (Long, Long)): (Long, Long) =
+    (addExact(a._1, b._1), addExact(a._2, b._2))
+
+  /** (n, Σy) of a non-empty cell set. */
+  private def nSy(cells: Seq[Cell]): (Long, Long) =
+    cells.map(c => (c.cn, c.csy)).reduce(plus)
+
   // variance-reduction split score over doubles CAST from exact integer
-  // sums — identical text on both engines (the OLS/Cramer discipline)
+  // sums — the oracle's text; bestSplit evaluates the same arithmetic in
+  // the same order (the OLS/Cramer discipline)
   private val treeScoreText =
     "CAST(syl AS DOUBLE) * CAST(syl AS DOUBLE) / CAST(nl AS DOUBLE) + " +
       "CAST(syr AS DOUBLE) * CAST(syr AS DOUBLE) / CAST(nr AS DOUBLE)"
 
-  /** Candidate splits from a histogram: cumulative (left-side) sums per
-    * partition via window over the few-KB histogram frame — never over
-    * the data. `x <= thr` goes left; thresholds with an empty side are
-    * dropped. */
-  private def treeSplits(h: DataFrame, part: Seq[String]): DataFrame = {
-    val cum = Window.partitionBy(part.map(col): _*).orderBy("bin")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy(part.map(col): _*)
-    h.withColumn("nl", sum("n").over(cum))
-      .withColumn("syl", sum("sy").over(cum))
-      .withColumn("nr", sum("n").over(tot) - col("nl"))
-      .withColumn("syr", sum("sy").over(tot) - col("syl"))
-      .filter(col("nl") > 0 && col("nr") > 0)
-      .withColumn("score", expr(treeScoreText))
-  }
+  private val bestFirst: Ordering[(Double, Long, Long)] = Ordering.Tuple3(
+    Ordering.Double.TotalOrdering.reverse, Ordering.Long, Ordering.Long)
+
+  /** The best split of `cells`: per feature, the histogram over the bins
+    * present, cumulative (left-side) sums in bin order, thresholds with
+    * an empty side dropped, scored as treeScoreText; highest score
+    * first, ties by (feat, bin). None when every cell sits in one bin
+    * on both features. */
+  private def bestSplit(cells: Seq[Cell]): Option[Split] =
+    Seq(1L, 2L).flatMap { feat =>
+      val hist = cells.groupMapReduce(c => if (feat == 1) c.b1 else c.b2)(
+        c => (c.cn, c.csy))(plus).toSeq.sortBy(_._1)
+      val (nt, syt) = hist.map(_._2).foldLeft((0L, 0L))(plus)
+      var nl, syl = 0L
+      hist.flatMap { case (bin, (n, sy)) =>
+        nl = addExact(nl, n)
+        syl = addExact(syl, sy)
+        val (nr, syr) = (subtractExact(nt, nl), subtractExact(syt, syl))
+        if (nl > 0 && nr > 0) Some((syl.toDouble * syl.toDouble /
+          nl.toDouble + syr.toDouble * syr.toDouble / nr.toDouble, feat, bin))
+        else None
+      }
+    }.minOption(bestFirst).map { case (_, feat, bin) => Split(feat, bin) }
 
   private def treeSplitsSql(h: String, part: String): String = s"""
     SELECT *, $treeScoreText AS score
@@ -340,63 +343,32 @@ object Learn extends QueryModule {
         FROM $h))
     WHERE nl > 0 AND nr > 0"""
 
-  /** Learn the depth-2 tree from a cell-stats frame: (root split,
-    * level-1 histogram, per-node child splits). Both histogram passes
-    * are tiny cell-frame aggregates; the data is scanned once, by
-    * cellStats. The tiny frames are persisted because two consumers
-    * each would otherwise re-run the chain behind them (Verify/Bench
-    * clearCache between queries). */
-  private def treeLevels(cells: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val best0 = treeSplits(histPass(cells, Nil), Seq("feat"))
-      .orderBy(desc("score"), col("feat"), col("bin")).limit(1)
-      .select(col("feat").as("root_feat"), col("bin").as("root_thr"))
-      .persist()
-    val assigned = cells.crossJoin(broadcast(best0))
-      .withColumn("node", expr(
-        "CAST(CASE WHEN (root_feat = 1 AND b1 <= root_thr) " +
-          "OR (root_feat = 2 AND b2 <= root_thr) " +
-          "THEN 0 ELSE 1 END AS BIGINT)"))
-    val h1 = histPass(assigned, Seq("node")).persist()
-    val best1 = treeSplits(h1, Seq("node", "feat"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("node")
-          .orderBy(desc("score"), col("feat"), col("bin"))))
-      .filter(col("rn") === 1)
-      .select(col("node"), col("feat").as("split_feat"),
-        col("bin").as("split_thr"))
-      .persist()
-    (best0, h1, best1)
+  /** A fitted depth-2 tree: the root split, each level-1 node's split,
+    * and each leaf's (n, Σy). A node whose cells all sit in one bin on
+    * both features has no split, and its cells drop out of scoring, as
+    * the oracle's inner joins drop them. */
+  private[graft] final case class Tree(root: Split, kids: Map[Long, Split],
+      leaves: Map[Long, (Long, Long)]) {
+    def leaf(c: Cell): Option[Long] =
+      kids.get(root.side(c)).map(k => root.side(c) * 2 + k.side(c))
+    /** Integer-cents leaf mean (Σy DIV n); None for a dropped cell. */
+    def predict(c: Cell): Option[Long] =
+      leaf(c).map { l => val (n, sy) = leaves(l); sy / n }
   }
 
-  /** Apply a learned tree to `f`, appending the integer-cents
-    * prediction as `out` and keeping f's columns: three broadcast
-    * layers (root split row, per-node child splits, 4-row leaf means)
-    * over `f`, a cell-stats frame — chaining B trees stacks B
-    * broadcast-join layers on ONE pass over it, which is how a forest
-    * scores at 100 TB (never one pass per tree). */
-  private def treeApply(f: DataFrame,
-      model: (DataFrame, DataFrame, DataFrame), out: String): DataFrame = {
-    val (best0, h1, best1) = model
-    val preds = treeLeaves(best0, h1, best1)
-      .selectExpr("leaf", s"sy DIV n AS $out")
-    val inCols = f.columns.map(col)
-    f.crossJoin(broadcast(best0))
-      .withColumn("node", expr(
-        "CAST(CASE WHEN (root_feat = 1 AND b1 <= root_thr) " +
-          "OR (root_feat = 2 AND b2 <= root_thr) " +
-          "THEN 0 ELSE 1 END AS BIGINT)"))
-      .join(broadcast(best1), Seq("node"))
-      .withColumn("leaf", col("node") * 2 + expr(
-        "CAST(CASE WHEN (split_feat = 1 AND b1 <= split_thr) " +
-          "OR (split_feat = 2 AND b2 <= split_thr) " +
-          "THEN 0 ELSE 1 END AS BIGINT)"))
-      .join(broadcast(preds), Seq("leaf"))
-      .select(inCols :+ col(out): _*)
-  }
+  /** Learn the depth-2 tree from collected cells: the root split, then
+    * one split per level-1 node from that node's cells. None when the
+    * root has no split. */
+  private[graft] def treeFit(cells: Seq[Cell]): Option[Tree] =
+    bestSplit(cells).map { root =>
+      val shape = Tree(root, cells.groupBy(root.side)
+        .flatMap { case (node, cs) => bestSplit(cs).map(node -> _) }, Map.empty)
+      shape.copy(leaves = cells.groupBy(shape.leaf)
+        .collect { case (Some(l), cs) => l -> nSy(cs) })
+    }
 
-  /** Oracle counterpart of treeApply: score EVERY row of `f` with tree
-    * `p` (the train CTEs are bag-scoped; scoring is corpus-wide). */
+  /** Oracle counterpart of Tree.predict: score EVERY row of `f` with
+    * tree `p` (the train CTEs are bag-scoped; scoring is corpus-wide). */
   private def treeScoreSql(p: String, out: String): String = s"""
     ${p}sa AS (
       SELECT f.*, CASE WHEN (root_feat = 1 AND b1 <= root_thr)
@@ -414,27 +386,33 @@ object Learn extends QueryModule {
       JOIN (SELECT leaf, sy // n AS p FROM ${p}leaves) pr
         USING (leaf))"""
 
-  /** Depth-1 fit (a stump) from a cell-stats frame — no data scan: the
-    * root split and the two side means, both partial sums of the SAME
-    * level-0 histogram. The value column is whatever the cells' csy
-    * holds, which is how boosting reuses this: round k fits the integer
-    * residuals of round k-1 ([[residCells]]). */
-  private def stumpFit(cells: DataFrame): DataFrame = {
-    val h0 = histPass(cells, Nil).persist()
-    val best0 = treeSplits(h0, Seq("feat"))
-      .orderBy(desc("score"), col("feat"), col("bin")).limit(1)
-      .select(col("feat").as("sfeat"), col("bin").as("sthr"))
-    h0.join(broadcast(best0), col("feat") === col("sfeat"))
-      .withColumn("side",
-        when(col("bin") <= col("sthr"), lit(0L)).otherwise(lit(1L)))
-      .groupBy("sfeat", "sthr", "side")
-      .agg(sum("n").as("n"), sum("sy").as("sy"))
-      // integer-cents side means, pivoted to ONE broadcastable row
-      .groupBy("sfeat", "sthr")
-      .agg(max(when(col("side") === 0, expr("sy DIV n"))).as("pl"),
-        max(when(col("side") === 1, expr("sy DIV n"))).as("pr"))
-      .persist()
+  /** A depth-1 fit: the root split and its two sides' integer-cents
+    * means. */
+  private[graft] final case class Stump(split: Split, pl: Long, pr: Long) {
+    def predict(c: Cell): Long = if (split.left(c)) pl else pr
   }
+
+  /** Depth-1 fit (a stump) from collected cells: the root split and the
+    * two side means, both partial sums of the SAME level-0 histogram.
+    * The value is whatever the cells' csy holds, which is how boosting
+    * reuses this: round k fits the integer residuals of the rounds
+    * before it ([[resid]]). */
+  private[graft] def stumpFit(cells: Seq[Cell]): Option[Stump] =
+    bestSplit(cells).map { sp =>
+      val (l, r) = cells.partition(sp.left)
+      val ((nl, syl), (nr, syr)) = (nSy(l), nSy(r))
+      Stump(sp, syl / nl, syr / nr)
+    }
+
+  private def dec(x: Long) = java.math.BigDecimal.valueOf(x)
+
+  /** A cell's exact integer residual under prediction p (csyy BEFORE
+    * csy — the cross term needs the pre-update Σy). Residuals compose:
+    * resid(resid(c, a), b) = resid(c, a + b). */
+  private def resid(c: Cell, p: Long): Cell =
+    c.copy(csy = subtractExact(c.csy, multiplyExact(c.cn, p)),
+      csyy = c.csyy.subtract(dec(2).multiply(dec(p)).multiply(dec(c.csy)))
+        .add(dec(c.cn).multiply(dec(p)).multiply(dec(p))))
 
   /** Oracle CTEs: fit one stump on `$src` (same h0/s0/best0 chain as the
     * tree, then 2-row side sums) and score+update residuals over it. */
@@ -464,19 +442,6 @@ object Learn extends QueryModule {
              CASE WHEN (sfeat = 1 AND b1 <= sthr) OR (sfeat = 2 AND b2 <= sthr)
              THEN pl ELSE pr END AS y
       FROM $src CROSS JOIN ${p}m)"""
-
-  /** Leaf sufficient statistics WITHOUT a third scan: a leaf is (node ×
-    * side of the node's chosen split), so its (n, Σy) is a partial sum
-    * of the level-1 histogram rows on that node's split feature. */
-  private def treeLeaves(best0: DataFrame, h1: DataFrame,
-      best1: DataFrame): DataFrame =
-    h1.join(broadcast(best1), Seq("node"))
-      .filter(col("feat") === col("split_feat"))
-      .withColumn("leaf", col("node") * 2 +
-        when(col("bin") <= col("split_thr"), lit(0L)).otherwise(lit(1L)))
-      .groupBy("leaf", "split_feat", "split_thr")
-      .agg(sum("n").as("n"), sum("sy").as("sy"))
-      .crossJoin(broadcast(best0))
 
   /** Oracle CTE chain learning one depth-2 tree from `$src`; every CTE
     * name takes prefix `p` so several trees (the bagged forest) can
@@ -549,45 +514,57 @@ object Learn extends QueryModule {
             FROM scored s JOIN preds p USING (leaf)))
     SELECT CAST(n AS BIGINT) AS n, $treeR2Text FROM ev"""
 
-  /** (n, sse, sy, syy) of a per-cell prediction column `p`: the SSE
-    * expands exactly from (cn, csy, csyy), as in [[residCells]]. */
-  private def cellsEval(scored: DataFrame, p: String): DataFrame =
-    scored.agg(expr("sum(cn)").as("n"),
-      expr(s"sum(csyy - 2 * CAST($p AS DECIMAL(38,0)) * csy + " +
-        s"CAST(cn AS DECIMAL(38,0)) * $p * $p)").as("sse"),
-      expr("sum(CAST(csy AS DECIMAL(38,0)))").as("sy"),
-      sum("csyy").as("syy"))
+  private val evalDdl =
+    "n BIGINT, sse DECIMAL(38,0), sy DECIMAL(38,0), syy DECIMAL(38,0)"
+
+  /** (n, sse, Σy, Σy²) over (cell, prediction) pairs, exact; with no
+    * rows every sum is null, as SQL SUM over an empty input. */
+  private[graft] def evalSums(scored: Seq[(Cell, Long)],
+      rows: Boolean): Seq[Any] = {
+    def total(xs: Seq[java.math.BigDecimal]) =
+      xs.foldLeft(java.math.BigDecimal.ZERO)(_ add _)
+    if (!rows) Seq(null, null, null, null)
+    else Seq(scored.map(_._1.cn).foldLeft(0L)(addExact),
+      total(scored.map { case (c, p) => resid(c, p).csyy }),
+      total(scored.map(x => dec(x._1.csy))), total(scored.map(_._1.csyy)))
+  }
+
+  /** A local frame of model-sized rows under `ddl`. Projections over it
+    * fold into the relation at optimization, so reading it runs no job. */
+  private def localFrame(s: SparkSession, ddl: String,
+      rows: Seq[Seq[Any]]): DataFrame =
+    s.createDataFrame(rows.map(Row.fromSeq).asJava, StructType.fromDDL(ddl))
 
   /** Depth-2 tree train + eval r² (ml_tree_r2, and the tree run that
-    * ml_runs_log logs): one data scan (cellStats); the tree's scoring
-    * and SSE are derived on the cells. */
+    * ml_runs_log logs): one data scan (cellStats); fit, scoring and SSE
+    * on the driver's cells. */
   private def treeR2Row(s: SparkSession, dir: String): DataFrame = {
-    val cells = cellStats(treeFeatures(s, dir), Nil)
-    cellsEval(treeApply(cells, treeLevels(cells), "p"), "p")
+    val cells = cellStats(treeFeatures(s, dir))
+    val scored = treeFit(cells).toSeq
+      .flatMap(t => cells.flatMap(c => t.predict(c).map(c -> _)))
+    localFrame(s, evalDdl, Seq(evalSums(scored, scored.nonEmpty)))
       .selectExpr("CAST(n AS BIGINT) AS n", treeR2Text)
   }
 
-  /** ml_forest_bagged body: one cell-stats scan with the bag as a cell
-    * coordinate; each tree trains on its bag's cells, and the ensemble
-    * SSE expands exactly from (cn, csy, csyy) because the averaged
+  /** ml_forest_bagged body: one cell-stats scan with the bag as the cell
+    * key; each tree trains on its bag's cells, and the ensemble SSE
+    * expands exactly from the bag-summed cells because the averaged
     * prediction is constant per (b1, b2) cell. */
   private def forestRow(s: SparkSession, dir: String): DataFrame = {
-    val cellsB = cellStats(
-      treeFeatures(s, dir).withColumn("bag", col("k") % 3), Seq("bag"))
-    val models =
-      (0 to 2).map(b => treeLevels(cellsB.filter(col("bag") === b)))
-    val allCells = cellsB.groupBy("b1", "b2")
-      .agg(sum("cn").as("cn"), sum("csy").as("csy"), sum("csyy").as("csyy"))
-    val scored = models.zipWithIndex.foldLeft(allCells) {
-      case (acc, (m, i)) => treeApply(acc, m, s"p$i")
+    val cells = cellStats(
+      treeFeatures(s, dir).withColumn("bag", col("k") % 3), Some("bag"))
+    val trees = (0L to 2L).flatMap(b => treeFit(cells.filter(_.key == b)))
+    val merged = cells.groupBy(c => (c.b1, c.b2)).values.toSeq
+      .map(_.reduce((a, b) => a.copy(cn = addExact(a.cn, b.cn),
+        csy = addExact(a.csy, b.csy), csyy = a.csyy.add(b.csyy))))
+    val scored = merged.flatMap { c =>
+      val ps = trees.flatMap(_.predict(c))
+      if (ps.size == 3) Some(c -> ps.foldLeft(0L)(addExact) / 3) else None
     }
-    val ev = cellsEval(
-      scored.withColumn("P", expr("(p0 + p1 + p2) DIV 3")), "P")
-    val roots = models.zipWithIndex.map { case ((best0, _, _), i) =>
-      broadcast(best0.select(col("root_feat").as(s"rf$i"),
-        col("root_thr").as(s"rt$i")))
-    }
-    roots.foldLeft(ev)((acc, r) => acc.crossJoin(r))
+    val rows = if (trees.size < 3) Nil else Seq(evalSums(scored,
+      scored.nonEmpty) ++ trees.flatMap(t => Seq(t.root.feat, t.root.thr)))
+    localFrame(s, evalDdl + (0 to 2).map(i =>
+        s", rf$i BIGINT NOT NULL, rt$i BIGINT").mkString, rows)
       .selectExpr(Seq("CAST(n AS BIGINT) AS n",
         "CAST(rf0 AS BIGINT) AS rf0", "CAST(rt0 AS BIGINT) AS rt0",
         "CAST(rf1 AS BIGINT) AS rf1", "CAST(rt1 AS BIGINT) AS rt1",
@@ -595,27 +572,23 @@ object Learn extends QueryModule {
         treeR2Text): _*)
   }
 
-  /** ml_gbt_stumps body: the 3-round boosting chain on the cell frame.
-    * The residual csy/csyy updates are exact integer identities, and
-    * the y0 statistics ride the chain untouched for the r² total. */
+  /** ml_gbt_stumps body: the 3-round boosting chain on the cells. Round
+    * k fits the residuals of the rounds before it, and the train SSE is
+    * the cells' residual under all three rounds' summed prediction. */
   private def gbtRow(s: SparkSession, dir: String): DataFrame = {
-    val cells0 = cellStats(treeFeatures(s, dir), Nil)
-      .withColumn("csy0", col("csy")).withColumn("csyy0", col("csyy"))
-    val m0 = stumpFit(cells0)
-    val cells1 = residCells(cells0, m0)
-    val m1 = stumpFit(cells1)
-    val cells2 = residCells(cells1, m1)
-    val m2 = stumpFit(cells2)
-    val ev = residCells(cells2, m2).agg(expr("sum(cn)").as("n"),
-      sum("csyy").as("sse"),
-      expr("sum(CAST(csy0 AS DECIMAL(38,0)))").as("sy"),
-      sum("csyy0").as("syy"))
-    val models = Seq(m0, m1, m2).zipWithIndex.map { case (m, i) =>
-      broadcast(m.select(col("sfeat").as(s"sf$i"),
-        col("sthr").as(s"st$i"), col("pl").as(s"pl$i"),
-        col("pr").as(s"pr$i")))
+    val cells = cellStats(treeFeatures(s, dir))
+    def pred(ms: Seq[Stump], c: Cell) =
+      ms.map(_.predict(c)).foldLeft(0L)(addExact)
+    val stumps = (0 until 3).foldLeft(Vector.empty[Stump]) { (ms, _) =>
+      ms ++ stumpFit(cells.map(c => resid(c, pred(ms, c))))
     }
-    models.foldLeft(ev)(_ crossJoin _)
+    val scored = cells.map(c => c -> pred(stumps, c))
+    val rows = if (stumps.size < 3) Nil else Seq(evalSums(scored,
+      scored.nonEmpty) ++ stumps.flatMap(m =>
+        Seq(m.split.feat, m.split.thr, m.pl, m.pr)))
+    localFrame(s, evalDdl + (0 to 2).map(i =>
+        s", sf$i BIGINT NOT NULL, st$i BIGINT, pl$i BIGINT, pr$i BIGINT")
+        .mkString, rows)
       .selectExpr(Seq("CAST(n AS BIGINT) AS n") ++
         (0 to 2).flatMap(i => Seq(
           s"CAST(sf$i AS BIGINT) AS sf$i", s"CAST(st$i AS BIGINT) AS st$i",
@@ -624,26 +597,20 @@ object Learn extends QueryModule {
   }
 
   /** pipeline_model_eval body: one cell-stats pass with the train/test
-    * flag as a cell coordinate; the stump fits on the train cells, and
-    * the holdout SSE is the test cells' residual Σy². */
+    * flag as the cell key; the stump fits on the train cells, and the
+    * holdout SSE is the test cells' residual Σy². */
   private def modelEvalRow(s: SparkSession, dir: String): DataFrame = {
     val inTrain =
       "substr(md5(CAST(k AS STRING) || ':spl'), 1, 1) < 'd'"
-    val cs = cellStats(
-      treeFeatures(s, dir).withColumn("tr", expr(inTrain)), Seq("tr"))
-    val m = stumpFit(cs.filter(col("tr")).drop("tr"))
-    val ev = residCells(
-        cs.withColumn("csy0", col("csy"))
-          .withColumn("csyy0", col("csyy")), m)
-      .agg(expr("sum(CASE WHEN tr THEN cn ELSE 0 END)").as("n_train"),
-        expr("sum(CASE WHEN tr THEN 0 ELSE cn END)").as("n"),
-        expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
-          "ELSE csyy END)").as("sse"),
-        expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
-          "ELSE CAST(csy0 AS DECIMAL(38,0)) END)").as("sy"),
-        expr("sum(CASE WHEN tr THEN CAST(0 AS DECIMAL(38,0)) " +
-          "ELSE csyy0 END)").as("syy"))
-    ev.crossJoin(broadcast(m))
+    val cells = cellStats(
+      treeFeatures(s, dir).withColumn("tr", expr(inTrain)), Some("tr"))
+    val (train, test) = cells.partition(_.key == true)
+    val rows = stumpFit(train).toSeq.map(m =>
+      train.map(_.cn).foldLeft(0L)(addExact) +:
+        (evalSums(test.map(c => c -> m.predict(c)), rows = true) ++
+          Seq(m.split.feat, m.split.thr, m.pl, m.pr)))
+    localFrame(s, "n_train BIGINT, " + evalDdl + ", sfeat BIGINT NOT NULL, " +
+        "sthr BIGINT, pl BIGINT, pr BIGINT", rows)
       .selectExpr("CAST(n_train AS BIGINT) AS n_train",
         "CAST(n AS BIGINT) AS n_test",
         "CAST(sfeat AS BIGINT) AS sfeat", "CAST(sthr AS BIGINT) AS sthr",
@@ -859,8 +826,8 @@ object Learn extends QueryModule {
     // defines it plus its (n, mean-cents prediction) — so the green
     // hash row proves both engines learned the identical tree, not just
     // similar aggregates. Scale shape (see cellStats): one scan of the
-    // data; both levels and the split selection run over the few-KB
-    // cell and histogram frames, never the data. ----
+    // data to collected cell statistics; both levels and the split
+    // selection run on the driver over those cells, never the data. ----
     Q(
       "ml_tree_hist_depth2",
       Some(s"""
@@ -875,13 +842,17 @@ object Learn extends QueryModule {
         FROM leaves CROSS JOIN best0
         ORDER BY leaf"""),
       (s, dir) => {
-        val (best0, h1, best1) =
-          treeLevels(cellStats(treeFeatures(s, dir), Nil))
-        treeLeaves(best0, h1, best1)
+        val rows = treeFit(cellStats(treeFeatures(s, dir))).toSeq.flatMap(t =>
+          t.leaves.toSeq.sortBy(_._1).map { case (leaf, (n, sy)) =>
+            val k = t.kids(leaf / 2)
+            Seq(leaf, t.root.feat, t.root.thr, k.feat, k.thr, n, sy)
+          })
+        localFrame(s, "leaf BIGINT NOT NULL, root_feat BIGINT NOT NULL, " +
+            "root_thr BIGINT, split_feat BIGINT NOT NULL, split_thr BIGINT, " +
+            "n BIGINT, sy BIGINT", rows)
           .selectExpr("leaf", "root_feat", "root_thr",
             "split_feat", "split_thr", "n",
             "round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 4) AS pred")
-          .orderBy("leaf")
       }),
 
     // ---- tree EVAL: apply the learned tree and compute r² engine-side
@@ -900,11 +871,10 @@ object Learn extends QueryModule {
     // (RandomForestRegressor, realestate_pipeline.py:224-233) as three
     // depth-2 histogram trees on disjoint deterministic bags
     // (k % 3 — reproducible bootstrap stand-in), averaged by integer
-    // division. ONE scan builds per-(bag, cell) statistics; train runs
-    // 3 bags × 2 levels = 6 histogram passes over that frame, and
-    // scoring applies three stacked broadcast layers (treeApply) to
-    // the bag-summed cells — a forest never scans once per tree. Output pins the three root splits
-    // (structure diversity across bags) and the ensemble r²; every
+    // division. ONE scan builds per-(bag, cell) statistics; the driver
+    // trains each bag's tree on its cells and scores the bag-summed
+    // cells — a forest never scans once per tree. Output pins the three
+    // root splits (structure diversity across bags) and the ensemble r²; every
     // number integer-exact or shared-text, so the row hash proves both
     // engines learned the identical forest. ----
     Q(
@@ -1024,9 +994,9 @@ object Learn extends QueryModule {
     // whole 3-round chain is deterministic and the final residual frame
     // IS the model's training error (SSE = Σ residual²). Cost: ONE
     // scan to per-cell statistics; each round's histogram and residual
-    // update run on that frame with the 1-row stump models broadcast
-    // between rounds — boosting at 100 TB is one scan, never k scans
-    // or k shuffles of the data. Output pins all three stumps (feat,
+    // update run on the driver over those cells — boosting at 100 TB
+    // is one scan, never k scans or k shuffles of the data. Output
+    // pins all three stumps (feat,
     // thr, side values) + train r² in one hashed row. ----
     Q(
       "ml_gbt_stumps",
@@ -1260,10 +1230,10 @@ object Learn extends QueryModule {
     // holdout r² comes from exact integer sufficient statistics of the
     // TEST side — the model never sees it. ONE scan to per-cell
     // statistics keyed by the split flag; the fit reads the train
-    // cells, the eval the test cells, with the 1-row broadcast model
-    // between them; nothing is collected. This is the capability the
-    // reference's sklearn train_test_split+fit+score cell exercises
-    // (airflow/dags/realestate_pipeline.py:224-234), as distributed
+    // cells, the eval the test cells; only those cells are collected.
+    // This is the capability the reference's sklearn
+    // train_test_split+fit+score cell exercises
+    // (airflow/dags/realestate_pipeline.py:224-234), as one distributed
     // aggregation. ----
     Q(
       "pipeline_model_eval",
@@ -1496,7 +1466,10 @@ object Learn extends QueryModule {
           ("r2_tree_depth2", "hist_tree_depth2",
             Seq("depth" -> "2", "bins" -> TreeBins.toString),
             treeR2Row(s, dir))))
-        RunStore.snapshot(s, root).orderBy("run_id", "metric")
+        // the ledger is model-sized: sort it in one partition instead of
+        // a range-partitioned global sort (a sampling job plus a shuffle)
+        RunStore.snapshot(s, root).coalesce(1)
+          .sortWithinPartitions("run_id", "metric")
       })
   )
 }

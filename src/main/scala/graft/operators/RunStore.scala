@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** EXPERIMENT-TRACKING SINK — the engine-side analog of the reference's
   * MLflow logging step (reference: airflow/dags/realestate_pipeline.py:
@@ -16,9 +18,11 @@ import org.apache.spark.sql.functions._
   *   <root>/metrics   (run_id, metric, value)  — doubles
   *
   * Scale stance: a logged metrics set is MODEL-sized (the one-row fit
-  * summaries the Learn family produces), never data-sized — each log()
-  * is a metadata-scale append whose cost is independent of the training
-  * corpus, and the read side is a plain parquet scan. A production
+  * summaries the Learn family produces), never data-sized. So logging
+  * collects that row to the driver and appends local rows — one write
+  * job per table, whose cost is independent of the training corpus —
+  * and every read is a plain parquet scan under the schemas declared
+  * here, with no inference job. A production
   * deployment partitions runs/ by date and compacts small files
   * (compact_small_files is the operator for exactly that); the schema
   * does not change.
@@ -33,24 +37,45 @@ object RunStore {
     ()
   }
 
-  /** Append one run: identity + string params + the metrics row. The
-    * metrics frame is unpivoted ENGINE-side (map + explode over its
-    * numeric columns) — no collect; the model row never crosses the
-    * driver. */
+  /** The three ledger tables' schemas, declared once: writers build
+    * their rows against them and every reader skips schema inference.
+    * All fields nullable, as a parquet read reports them. */
+  val schemas: Map[String, StructType] = Map(
+    "runs" -> "run_id STRING, algo STRING",
+    "params" -> "run_id STRING, param STRING, value STRING",
+    "metrics" -> "run_id STRING, metric STRING, value DOUBLE")
+    .map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
+  /** One ledger table, read under its declared schema (no job). */
+  def read(s: SparkSession, root: String, table: String): DataFrame =
+    s.read.schema(schemas(table)).parquet(s"$root/$table")
+
+  /** Append one run: identity + string params + the metrics row. */
   def log(s: SparkSession, root: String, runId: String, algo: String,
-      params: Seq[(String, String)], metricsRow: DataFrame): Unit = {
-    import s.implicits._
-    s.range(1).select(lit(runId).as("run_id"), lit(algo).as("algo"))
-      .write.mode("append").parquet(s"$root/runs")
-    params.toDF("param", "value")
-      .select(lit(runId).as("run_id"), col("param"), col("value"))
-      .write.mode("append").parquet(s"$root/params")
-    val kvs = metricsRow.columns
-      .flatMap(c => Seq(lit(c), col(c).cast("double")))
-    metricsRow.select(explode(map(kvs.toIndexedSeq: _*)))
-      .toDF("metric", "value")
-      .select(lit(runId).as("run_id"), col("metric"), col("value"))
-      .write.mode("append").parquet(s"$root/metrics")
+      params: Seq[(String, String)], metricsRow: DataFrame): Unit =
+    logAll(s, root, Seq((runId, algo, params, metricsRow)))
+
+  /** Append runs, one commit per ledger table: a write costs one job
+    * of commit-protocol latency, not data, so logging k runs pays 3
+    * jobs instead of 3·k. Each metrics frame is model-sized (a one-row
+    * fit summary): its columns, cast to double in Spark, are collected
+    * and unpivoted into (metric, value) rows on the driver, and all
+    * three tables are written from local rows. The tables are unordered
+    * append-only sets and every row carries its run_id. */
+  def logAll(s: SparkSession, root: String,
+      runs: Seq[(String, String, Seq[(String, String)], DataFrame)]): Unit = {
+    def append(table: String, rows: Seq[Row]): Unit =
+      s.createDataFrame(rows.asJava, schemas(table))
+        .write.mode("append").parquet(s"$root/$table")
+    append("runs", runs.map { case (runId, algo, _, _) => Row(runId, algo) })
+    append("params", runs.flatMap { case (runId, _, params, _) =>
+      params.map { case (k, v) => Row(runId, k, v) }
+    })
+    append("metrics", runs.flatMap { case (runId, _, _, m) =>
+      m.select(m.columns.toSeq.map(c => col(c).cast("double")): _*)
+        .collect().toSeq.flatMap(r =>
+          m.columns.toSeq.zip(r.toSeq).map { case (c, v) => Row(runId, c, v) })
+    })
     // the Serve catalog tables (registerViews) cache their resolved
     // file listing in the session's tableRelationCache, so a long-lived
     // JDBC/BI session could miss runs appended after it first queried —
@@ -60,45 +85,13 @@ object RunStore {
       .foreach(t => s.sql(s"REFRESH TABLE $t"))
   }
 
-  /** Append SEVERAL runs in one commit per table (round-16
-    * optimization): each [[log]] call costs three parquet write jobs —
-    * commit-protocol latency, not data — so a caller logging a batch of
-    * runs (ml_runs_log logs two) pays 3 jobs instead of 3·k. Ledger
-    * content is identical to k sequential [[log]] calls: the tables are
-    * unordered append-only sets and every row carries its run_id. */
-  def logAll(s: SparkSession, root: String,
-      runs: Seq[(String, String, Seq[(String, String)], DataFrame)]): Unit = {
-    import s.implicits._
-    runs.map { case (runId, algo, _, _) =>
-      s.range(1).select(lit(runId).as("run_id"), lit(algo).as("algo"))
-    }.reduce(_ unionByName _)
-      .write.mode("append").parquet(s"$root/runs")
-    runs.map { case (runId, _, params, _) =>
-      params.toDF("param", "value")
-        .select(lit(runId).as("run_id"), col("param"), col("value"))
-    }.reduce(_ unionByName _)
-      .write.mode("append").parquet(s"$root/params")
-    runs.map { case (runId, _, _, metricsRow) =>
-      val kvs = metricsRow.columns
-        .flatMap(c => Seq(lit(c), col(c).cast("double")))
-      metricsRow.select(explode(map(kvs.toIndexedSeq: _*)))
-        .toDF("metric", "value")
-        .select(lit(runId).as("run_id"), col("metric"), col("value"))
-    }.reduce(_ unionByName _)
-      .write.mode("append").parquet(s"$root/metrics")
-    Seq("ml_runs", "ml_params", "ml_metrics")
-      .filter(s.catalog.tableExists)
-      .foreach(t => s.sql(s"REFRESH TABLE $t"))
-  }
-
   /** The queryable run ledger: runs ⋈ metrics, plus the per-run param
-    * count (broadcast — runs/params are metadata-sized). */
+    * count. runs and the param counts are model-sized, so both are
+    * broadcast into the join. */
   def snapshot(s: SparkSession, root: String): DataFrame = {
-    val runs = s.read.parquet(s"$root/runs")
-    val metrics = s.read.parquet(s"$root/metrics")
-    val nParams = s.read.parquet(s"$root/params")
+    val nParams = read(s, root, "params")
       .groupBy("run_id").agg(count(lit(1)).as("n_params"))
-    runs.join(metrics, "run_id")
+    broadcast(read(s, root, "runs")).join(read(s, root, "metrics"), "run_id")
       .join(broadcast(nParams), Seq("run_id"), "left")
       .select(col("run_id"), col("algo"),
         coalesce(col("n_params"), lit(0L)).as("n_params"),
@@ -118,7 +111,8 @@ object RunStore {
       "metrics" -> "ml_metrics").foreach { case (d, v) =>
       s.catalog.dropTempView(v) // a stale temp view would shadow
       s.sql(s"DROP TABLE IF EXISTS $v")
-      s.sql(s"CREATE TABLE $v USING parquet LOCATION '$root/$d'")
+      s.sql(s"CREATE TABLE $v (${schemas(d).toDDL}) " +
+        s"USING parquet LOCATION '$root/$d'")
     }
 
   /** Default store location for a given data dir. */

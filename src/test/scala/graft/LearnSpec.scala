@@ -1,6 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.ListenerDrain
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  SparkPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Semantic pins for the engine-side train steps (operators.Learn) —
   * the DuckDB oracle pins cross-engine value equality; these pin that
@@ -90,26 +95,78 @@ class LearnSpec extends SparkSpec {
     }
   }
 
+  test("tree-family queries and ml_runs_log keep their output schemas") {
+    // recorded at sf0.001 from the DataFrame learner these queries ran
+    // before the driver-side fit; NOT NULL marks are part of the pin
+    val schemas = Seq(
+      "ml_tree_hist_depth2" -> ("leaf BIGINT NOT NULL,root_feat BIGINT " +
+        "NOT NULL,root_thr BIGINT,split_feat BIGINT NOT NULL," +
+        "split_thr BIGINT,n BIGINT,pred DOUBLE"),
+      "ml_tree_r2" -> "n BIGINT,r2 DOUBLE",
+      "ml_forest_bagged" -> ("n BIGINT,rf0 BIGINT NOT NULL,rt0 BIGINT," +
+        "rf1 BIGINT NOT NULL,rt1 BIGINT,rf2 BIGINT NOT NULL,rt2 BIGINT," +
+        "r2 DOUBLE"),
+      "ml_gbt_stumps" -> ("n BIGINT," + (0 to 2).map(i =>
+        s"sf$i BIGINT NOT NULL,st$i BIGINT,pl$i BIGINT,pr$i BIGINT,")
+        .mkString + "r2 DOUBLE"),
+      "pipeline_model_eval" -> ("n_train BIGINT,n_test BIGINT,sfeat " +
+        "BIGINT NOT NULL,sthr BIGINT,pl BIGINT,pr BIGINT,r2 DOUBLE"),
+      "ml_runs_log" -> ("run_id STRING,algo STRING,n_params BIGINT NOT " +
+        "NULL,metric STRING,value DOUBLE"))
+    for ((q, want) <- schemas) {
+      val got = SparkEntry.queries(q)(spark, sf).schema.toDDL
+      assert(got == want, s"$q schema $got")
+    }
+    // the ledger the tracking sink reads back, recorded alongside
+    val ledger = SparkEntry.queries("ml_runs_log")(spark, sf).collect()
+      .map(_.toString).toSeq
+    assert(ledger == Seq(
+      "[r1_ols_cents,ols_normal_equations,2,b0,2.4998770883681E7]",
+      "[r1_ols_cents,ols_normal_equations,2,b1,1319.569498]",
+      "[r1_ols_cents,ols_normal_equations,2,b2,-4911.661156]",
+      "[r1_ols_cents,ols_normal_equations,2,n,1500.0]",
+      "[r1_ols_cents,ols_normal_equations,2,r2,3.86E-4]",
+      "[r2_tree_depth2,hist_tree_depth2,2,n,1500.0]",
+      "[r2_tree_depth2,hist_tree_depth2,2,r2,0.005262]"),
+      ledger.mkString(" | "))
+  }
+
   test("each tree-family query scans orders ONCE") {
-    // every histogram level, boosting round and eval pass reads the
-    // per-cell statistics; only cellStats reads the table. Scans are
-    // counted over PlanSmells' audit roots, so one hidden under a
-    // persist() still counts.
+    // the one cellStats aggregation runs, and is collected, while the
+    // frame is built; the frame returned is local. So scans are counted
+    // over every plan the query executes, construct plus collect, as a
+    // QueryExecutionListener reports them (over PlanSmells' audit
+    // roots, so a scan hidden under a persist() still counts).
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
     try {
       for (q <- Seq("ml_gbt_stumps", "ml_forest_bagged",
           "pipeline_model_eval", "ml_tree_r2", "ml_tree_hist_depth2")) {
-        val plan = SparkEntry.queries(q)(spark, sf)
-          .queryExecution.executedPlan
-        val scans = PlanSmells.auditRoots(plan).map(_.collectWithSubqueries {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec
-              if s.relation.location.rootPaths
-                .exists(_.getName == "orders.parquet") => s
-        }.size).sum
-        spark.catalog.clearCache()
-        assert(scans == 1, s"$q scans orders $scans times")
+        ListenerDrain(spark.sparkContext)
+        plans.clear()
+        SparkEntry.queries(q)(spark, sf).collect()
+        ListenerDrain(spark.sparkContext)
+        val scans = plans.asScala.toSeq.map(p =>
+          PlanSmells.auditRoots(p).map(_.collectWithSubqueries {
+            case s: FileSourceScanExec
+                if s.relation.location.rootPaths
+                  .exists(_.getName == "orders.parquet") => s
+          }.size).sum).sum
+        assert(scans == 1,
+          s"$q scans orders $scans times over ${plans.size} plans")
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("depth-2 tree partitions all rows into 4 leaves and reduces SSE") {
