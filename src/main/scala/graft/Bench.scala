@@ -136,9 +136,8 @@ object Bench {
     val loadAfter = loadavg()
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) =>
-      "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    }.mkString("{", ",", "}")
+    val errJson = errors.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
+      .mkString("{", ",", "}")
     val spillJson = spillMb.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val runsJson = allRuns.map { case (k, v) =>
@@ -177,7 +176,7 @@ object Bench {
       s""""sentinel_ratios":{"mid_start":$midStart,"end_start":$endStart},""" +
         s""""sentinels_quiet":$sentinelsQuiet"""
     val total = results.map(_._2).filter(_ >= 0).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"spill_mb":$spillJson,"runs":$runsJson,"sentinels":$sentJson,$sentVerdict,"load_before":${arr(loadBefore)},"load_after":${arr(loadAfter)},"nproc":$nproc,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"spill_mb":$spillJson,"runs":$runsJson,"sentinels":$sentJson,$sentVerdict,"load_before":${arr(loadBefore)},"load_after":${arr(loadAfter)},"nproc":$nproc,"sf":${Json.str(sfDir)}}"""
     println(json)
     // the driver clips sbt stdout (round 8's BENCH_r08.json kept only an
     // alphabetical tail of the per-query map, "parsed": null), so also

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 
@@ -14,34 +15,25 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
   *    pushdown past the JVM JIT thresholds (interpreted bytecode, 3.7×
   *    on p2_null_drop once fixed).
   *
-  * For every registered query this reports, from the pre-adaptive
+  * For every registered query it reports, from the pre-adaptive
   * physical plan (aggregate strategy choices are made at planning, not
-  * by AQE): SortAggregate count, hash/object-hash counts for context,
+  * by AQE) and every cached plan under it ([[auditRoots]]):
+  * SortAggregate count, hash/object-hash counts for context,
   * CodegenFallback expression classes present in hot operators, and the
   * largest single expression tree (node count) — a proxy for
-  * JIT-threshold risk. Since round 13 this is a GATE, not just a
-  * report: PlanSmellsGateSpec recomputes these stats in `sbt test` and
-  * diffs them against the committed `PLAN_SMELLS_BASELINE.json` —
-  * a new SortAggregate, a new codegen-fallback class, or expression-
-  * tree growth past the measured JIT-risk threshold fails the build.
+  * JIT-threshold risk. PlanSmellsGateSpec diffs these stats against the
+  * committed `PLAN_SMELLS_BASELINE.json` under [[violations]]: a new
+  * SortAggregate, a new codegen-fallback class, or expression-tree
+  * growth past the measured JIT-risk threshold fails the build.
   * SortAggregate is correct for genuinely sort-based aggregates
   * (collation grouping, streaming state, 1-row XML/JSON/DDL frames) and
   * some fallbacks are deliberate (TrigramShingles' one-pass scan beat
   * the per-element HOF dispatch it replaced) — those live in the
-  * baseline and the spec's allowlists.
-  *
-  * Since round 14 traversal DESCENDS into persist() boundaries: every
-  * InMemoryTableScanExec's cached physical plan (unwrapping AQE) is
-  * audited as an additional root, recursively, with identity-dedup so
-  * a self-join over one cache counts its plan once. Round 13 had
-  * documented the InMemoryRelation blind spot (a persist hid everything
-  * beneath it — its own two-stage restructure surfaced previously-
-  * hidden fallback classes when a cache moved); the gate now sees
-  * through caches, and the baseline carries the newly visible rows.
+  * baseline.
   *
   * Baseline-update procedure (after REVIEWING the diff — an update
   * must be a decision, not a reflex):
-  *   sbt "runMain graft.PlanSmells /root/testdata/sf0.001 PLAN_SMELLS_BASELINE.json"
+  *   sbt "runMain graft.Inspect smells /root/testdata/sf0.001 PLAN_SMELLS_BASELINE.json"
   * then commit the regenerated file alongside the change that moved it.
   */
 object PlanSmells {
@@ -55,26 +47,13 @@ object PlanSmells {
       error: Option[String]) {
     def json: String =
       error match {
-        case Some(e) => s"""{"error":${jsonStr(e)}}"""
+        case Some(e) => s"""{"error":${Json.str(e)}}"""
         case None =>
           s"""{"sort_agg":$sortAgg,"hash_agg":$hashAgg,""" +
             s""""obj_hash_agg":$objHashAgg,"max_expr_tree":$maxExprTree,""" +
-            s""""codegen_fallbacks":[${fallbacks.map(jsonStr).mkString(",")}]}"""
+            s""""codegen_fallbacks":[${fallbacks.map(Json.str).mkString(",")}]}"""
       }
   }
-
-  /** Full JSON string escape (backslash, quote, control chars) — a raw
-    * backslash or tab in an exception message previously made the
-    * artifact invalid JSON. */
-  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** The roots an audit walks: the plan itself plus, recursively, every
     * InMemoryTableScanExec's cached plan (AQE unwrapped), so a persist()
@@ -101,10 +80,24 @@ object PlanSmells {
     roots.toSeq
   }
 
+  /** Apply `f` to a query's audit roots: those of the pre-adaptive
+    * sparkPlan (aggregate strategy choices are made at planning, not by
+    * AQE), or, when `f` cannot walk them, those of the prepared
+    * executedPlan. Subquery-carrying plans (bloom prefilter, DPP probe,
+    * NOT IN) hold LOGICAL subquery plans before preparation, and
+    * collectWithSubqueries cannot traverse them. */
+  private[graft] def overAuditRoots[A](qe: QueryExecution)(
+      f: Seq[SparkPlan] => A): A =
+    try f(auditRoots(qe.sparkPlan))
+    catch { case _: Throwable => f(auditRoots(qe.executedPlan)) }
+
   /** Smell stats of one physical plan over its [[auditRoots]] (exposed
     * so the gate spec can prove the detector on a planted regression). */
-  private[graft] def smellsOfPlan(plan: SparkPlan): Smells = {
-    val roots = auditRoots(plan)
+  private[graft] def smellsOfPlan(plan: SparkPlan): Smells =
+    smellsOfRoots(auditRoots(plan))
+
+  /** Smell stats summed over audit roots. */
+  private[graft] def smellsOfRoots(roots: Seq[SparkPlan]): Smells = {
     var sortAggs, hashAggs, objAggs = 0
     val fallbacks = scala.collection.mutable.SortedSet[String]()
     var maxTree = 0
@@ -131,32 +124,14 @@ object PlanSmells {
     Smells(sortAggs, hashAggs, objAggs, maxTree, fallbacks.toSeq, None)
   }
 
-  /** Smell stats of one registered query's pre-adaptive plan. */
-  private[graft] def smellsOf(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Smells =
-    try {
-      val qe = fn(spark, sfDir).queryExecution
-      // subquery-carrying plans (bloom prefilter, DPP probe, NOT IN)
-      // hold LOGICAL subquery plans before preparation and
-      // collectWithSubqueries cannot traverse them — retry on the
-      // prepared executedPlan rather than reporting an error
-      try smellsOfPlan(qe.sparkPlan)
-      catch { case _: Throwable => smellsOfPlan(qe.executedPlan) }
-    } catch {
-      case e: Throwable =>
-        Smells(0, 0, 0, 0, Nil,
-          Some(e.toString.takeWhile(_ != '\n').take(160)))
-    }
+  /** Smell stats of one registered query, built by `df`. */
+  private[graft] def smellsOf(df: => DataFrame): Smells =
+    try overAuditRoots(df.queryExecution)(smellsOfRoots)
+    catch { case e: Throwable => failed(e) }
 
-  /** Stats for every registered query (alphabetical), releasing any
-    * within-plan persist() per query. */
-  private[graft] def statsFor(spark: SparkSession, sfDir: String)
-      : Seq[(String, Smells)] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val s = smellsOf(spark, sfDir, fn)
-      spark.catalog.clearCache()
-      name -> s
-    }
+  /** The row of a query that failed to build or plan. */
+  private[graft] def failed(e: Throwable): Smells =
+    Smells(0, 0, 0, 0, Nil, Some(e.toString.takeWhile(_ != '\n').take(160)))
 
   /** Expression trees past this node count are JIT-blowout risk:
     * p2_null_drop's measured blowout ran interpreted at 102 nodes
@@ -207,51 +182,16 @@ object PlanSmells {
   /** Parse a PLAN_SMELLS json artifact back into Smells rows (Jackson —
     * already on Spark's classpath). */
   private[graft] def parseBaseline(path: String): Map[String, Smells] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(path)))
-    val qs = root.get("queries")
-    val out = scala.collection.mutable.LinkedHashMap[String, Smells]()
-    val it = qs.fields()
-    while (it.hasNext) {
-      val e = it.next()
-      val v = e.getValue
-      out(e.getKey) =
-        if (v.has("error"))
-          Smells(0, 0, 0, 0, Nil, Some(v.get("error").asText()))
-        else Smells(
-          v.get("sort_agg").asInt(),
-          v.get("hash_agg").asInt(),
-          v.get("obj_hash_agg").asInt(),
-          v.get("max_expr_tree").asInt(),
-          {
-            val fb = scala.collection.mutable.ArrayBuffer[String]()
-            v.get("codegen_fallbacks").forEach(n => fb += n.asText())
-            fb.toSeq
-          },
-          None)
-    }
-    out.toMap
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    // exploratory default is the NON-baseline path: overwriting the
-    // committed gate baseline must be an explicit second argument (the
-    // scaladoc's update command), never an argument-less reflex
-    // (ADVICE r13)
-    val outPath = args.lift(1).getOrElse("PLAN_SMELLS.json")
-    val spark = GraftSession.local()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val stats = statsFor(spark, sfDir)
-    val failed = stats.count(_._2.error.isDefined)
-    val rows = stats.map { case (name, s) => s"${jsonStr(name)}:${s.json}" }
-      .mkString(",\n ")
-    val json = s"""{"sf_dir":${jsonStr(sfDir)},"queries":{\n $rows\n}}\n"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      json.getBytes("UTF-8"))
-    println(s"[smells] wrote $outPath (${stats.size} queries, $failed failed)")
-    spark.stop()
+    val qs = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(path)).get("queries")
+    qs.fieldNames.asScala.map { name =>
+      val v = qs.get(name)
+      def int(k: String) = v.get(k).asInt()
+      name -> (
+        if (v.has("error")) Smells(0, 0, 0, 0, Nil, Some(v.get("error").asText()))
+        else Smells(int("sort_agg"), int("hash_agg"), int("obj_hash_agg"),
+          int("max_expr_tree"),
+          v.get("codegen_fallbacks").elements.asScala.map(_.asText).toSeq, None))
+    }.toMap
   }
 }

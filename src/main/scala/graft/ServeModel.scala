@@ -87,15 +87,6 @@ object ServeModel {
     try os.write(bytes) finally os.close()
   }
 
-  /** JSON string literal with escaping (error messages carry quotes). */
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'          => "\\\""
-      case '\\'         => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c            => c.toString
-    } + "\""
-
   /** JSON-safe double: Infinity/NaN are not valid JSON literals, so
     * ledger-view doubles serialize as null; /predict rejects non-finite
     * values explicitly instead. */
@@ -110,7 +101,7 @@ object ServeModel {
       try h(ex)
       catch {
         case t: Throwable =>
-          try respond(ex, 500, s"""{"error":${jstr(t.toString.take(200))}}""")
+          try respond(ex, 500, s"""{"error":${Json.str(t.toString.take(200))}}""")
           catch { case _: Throwable => () } // headers already sent
       }
 

@@ -163,18 +163,6 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/_FAILED_QUERIES.txt"),
         failed.mkString("", "\n", "\n"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // error-bound artifact for the allowlisted no_oracle sketches: the
     // driver's hash compare can't grade them, so Verify grades them
     // itself (approx vs engine-exact under the published envelope) and
@@ -193,7 +181,7 @@ object Verify {
         if (java.lang.Double.isFinite(d)) d.toString else "null"
       val bj = bounds.map { case (qn, m, v, lo, hi, ok) =>
         val okF = ok && Seq(v, lo, hi).forall(java.lang.Double.isFinite)
-        s"""{"query": ${q(qn)}, "metric": ${q(m)}, "value": ${num(v)}, """ +
+        s"""{"query": ${Json.str(qn)}, "metric": ${Json.str(m)}, "value": ${num(v)}, """ +
           s""""lo": ${num(lo)}, "hi": ${num(hi)}, "within": $okF}"""
       }.mkString("[", ",\n ", "]")
       Files.writeString(Paths.get(s"$outDir/approx_bounds.json"), bj)
@@ -214,9 +202,9 @@ object Verify {
     } catch { case e: Throwable =>
       System.err.println(s"[verify] approx-bounds pass failed: $e")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -60,12 +60,15 @@ object RunStore {
     * jobs instead of 3·k. Each metrics frame is model-sized (a one-row
     * fit summary): its columns, cast to double in Spark, are collected
     * and unpivoted into (metric, value) rows on the driver, and all
-    * three tables are written from local rows. The tables are unordered
+    * three tables are written from local rows, coalesced to one
+    * partition so each append adds one file per table (a local relation
+    * otherwise splits into up to defaultParallelism files, all of which
+    * every ledger read then lists and opens). The tables are unordered
     * append-only sets and every row carries its run_id. */
   def logAll(s: SparkSession, root: String,
       runs: Seq[(String, String, Seq[(String, String)], DataFrame)]): Unit = {
     def append(table: String, rows: Seq[Row]): Unit =
-      s.createDataFrame(rows.asJava, schemas(table))
+      s.createDataFrame(rows.asJava, schemas(table)).coalesce(1)
         .write.mode("append").parquet(s"$root/$table")
     append("runs", runs.map { case (runId, algo, _, _) => Row(runId, algo) })
     append("params", runs.flatMap { case (runId, _, params, _) =>

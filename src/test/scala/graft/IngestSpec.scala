@@ -9,7 +9,7 @@ import graft.sources.Ingest
 class IngestSpec extends SparkSpec {
 
   private def write(name: String, content: String): String = {
-    val dir = Paths.get("/root/repo/target/scratch/ingest")
+    val dir = Paths.get(s"${Tables.scratchRoot}/ingest")
     Files.createDirectories(dir)
     val p = dir.resolve(name)
     Files.writeString(p, content)

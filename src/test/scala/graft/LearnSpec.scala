@@ -422,4 +422,18 @@ class LearnSpec extends SparkSpec {
     RunStore.registerViews(spark, root)
     assert(spark.sql("SELECT count(*) FROM ml_runs").head().getLong(0) == 3)
   }
+
+  test("one RunStore.log adds exactly one parquet file per ledger table") {
+    val root = s"${Tables.scratchRoot}/mlruns-files-spec"
+    operators.RunStore.reset(spark, root)
+    // 4 params and 3 metrics: an uncoalesced local relation splits them
+    operators.RunStore.log(spark, root, "a", "algo_a",
+      (1 to 4).map(i => s"k$i" -> s"v$i"),
+      spark.range(1).selectExpr("1.0 AS m1", "2.0 AS m2", "3.0 AS m3"))
+    for (table <- Seq("runs", "params", "metrics")) {
+      val files = new java.io.File(s"$root/$table").list()
+        .filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"$table: one log wrote ${files.mkString(", ")}")
+    }
+  }
 }

@@ -58,7 +58,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("silver writes date-partitioned from crawl filename and prunes on read") {
-    val out = "/root/repo/target/scratch/pipeline_silver"
+    val out = s"${Tables.scratchRoot}/pipeline_silver"
     val silver = Pipeline.bronzeToSilver(bronzeFixture)
     Pipeline.writeSilverPartitioned(silver, "crawl_20251003_120000.json", out)
     val back = spark.read.parquet(out)

@@ -18,8 +18,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("flagship pushes the shipdate filter into the parquet scan") {
-    val p = SparkEntry.queries("flagship_revenue_by_region")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val p = plan("flagship_revenue_by_region")
     assert(p.contains("PushedFilters") &&
       (p.contains("GreaterThanOrEqual(l_shipdate") ||
         p.contains("IsNotNull(l_shipdate")),
@@ -139,12 +138,11 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  private def sweep = RegistrySweep.facts(spark, sf)
+
   test("every registered query returns rows on sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          if (fn(spark, sf).limit(1).count() >= 0) None else Some(name)
-        } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+    val failures = sweep.flatMap { case (name, f) =>
+      f.runError.map(e => s"$name: $e")
     }
     assert(failures.isEmpty, s"queries failed: $failures")
   }
@@ -257,68 +255,19 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("global plan audit: unpartitioned windows only over bounded inputs") {
-    // a WindowExec with an empty partitionSpec funnels its entire input
-    // through ONE task ("No Partition Defined" warning) — a scale-killer
-    // unless the input is bounded by construction (under a limit, a
-    // grand aggregate's single row, or a literal local relation). The
-    // range-slice rewrites (ts_zscore_outliers, ml_auc_rank) exist
-    // precisely to avoid this shape on unbounded data; this audit keeps
-    // every other query honest.
-    import org.apache.spark.sql.execution.{SparkPlan, LocalTableScanExec,
-      GlobalLimitExec, LocalLimitExec, TakeOrderedAndProjectExec}
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.window.WindowExec
-    def bounded(p: SparkPlan): Boolean = p match {
-      case _: LocalTableScanExec => true
-      case _: GlobalLimitExec => true
-      case _: LocalLimitExec => true
-      case _: TakeOrderedAndProjectExec => true
-      case a: BaseAggregateExec if a.groupingExpressions.isEmpty => true
-      // an aggregate grouped ONLY on the slice id (__pid =
-      // spark_partition_id) emits ≤ one row per shuffle partition — a
-      // cluster-width constant, not a data-size quantity. This is the
-      // offsets frame of the TeraSort two-pass in globalRowNumber /
-      // exclusivePrefixSum; its tiny ordered window is the designed
-      // alternative to a global single-partition window.
-      case a: BaseAggregateExec
-          if a.groupingExpressions.flatMap(_.references.toSeq)
-            .forall(_.name == "__pid") => true
-      case other =>
-        other.children.nonEmpty && other.children.forall(bounded)
-    }
-    // windows over frames whose cardinality a LITERAL bounds (invisible
-    // to the structural walk) — each entry names its bound
+    // a window with no (or a constant) partition key runs in ONE task;
+    // RegistrySweep counts those over inputs not bounded by construction.
+    // The range-slice rewrites (ts_zscore_outliers, ml_auc_rank) exist to
+    // avoid this shape on unbounded data; this keeps every query honest.
+    // Allowed: windows over frames whose cardinality a LITERAL bounds
+    // (invisible to the structural walk) — each entry names its bound
     val boundedWindowAllowed = Set(
       "ml_cv_3fold_linreg", // 3-row fold-stats frame (fold = key % 3)
       "quality_benford") // ≤9-row digit histogram (lead_digit ∈ 1..9)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val bad =
-      try SparkEntry.queries.toSeq.sortBy(_._1)
-        .filterNot { case (name, _) => boundedWindowAllowed(name) }
-        .flatMap { case (name, fn) =>
-        // a constant-valued partitionSpec — foldable (lit(0)) or the
-        // non-foldable pmod(x, 1) spelling the repo uses to silence the
-        // "No Partition Defined" warning on audited-bounded frames — is
-        // still ONE partition: audit it exactly like an empty spec, so
-        // nothing unbounded can hide behind a constant key
-        def constantKey(e: org.apache.spark.sql.catalyst.expressions
-            .Expression): Boolean = e.foldable || (e match {
-          case p: org.apache.spark.sql.catalyst.expressions.Pmod =>
-            p.right.foldable && (p.right.eval() match {
-              case 1 | 1L => true
-              case _ => false
-            })
-          case _ => false
-        })
-        val unbounded =
-          try fn(spark, sf).queryExecution.executedPlan.collect {
-            case w: WindowExec
-                if w.partitionSpec.forall(constantKey) &&
-                  !bounded(w.child) => w
-          } catch { case _: Throwable => Nil } // broken queries fail elsewhere
-        if (unbounded.isEmpty) None
-        else Some(s"$name (${unbounded.size} unpartitioned window(s))")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val bad = sweep.collect {
+      case (name, f) if f.unboundedWindows > 0 && !boundedWindowAllowed(name) =>
+        s"$name (${f.unboundedWindows} unpartitioned window(s))"
+    }
     assert(bad.isEmpty, s"single-partition windows over unbounded input: $bad")
   }
 
@@ -362,13 +311,9 @@ class PlanShapeSpec extends SparkSpec {
       "curate_ccnet_ppl_buckets", // broadcast 1-row V + 1-row doc count
       "text_bpe_merge_train", // broadcast 1-row chosen merge per round
       "text_bpe_encode") // same trained-merge broadcasts feed the dict
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan =
-        try fn(spark, sf).queryExecution.executedPlan.toString
-        catch { case e: Throwable => s"ERROR ${e.getMessage}" }
-      val cart = plan.contains("CartesianProduct")
-      val bnl = plan.contains("BroadcastNestedLoopJoin") &&
-        !boundedNlAllowed(name)
+    val bad = sweep.flatMap { case (name, f) =>
+      val cart = f.cartesian
+      val bnl = f.nestedLoop && !boundedNlAllowed(name)
       if (cart || bnl) Some(s"$name cart=$cart bnl=$bnl") else None
     }
     assert(bad.isEmpty, s"unbounded join shapes: $bad")

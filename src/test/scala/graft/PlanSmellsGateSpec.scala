@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
   * lessons — the silent-SortAggregate trap and the JIT-blowout
   * expression trees — caught four live offenders when first run as a
   * report; this spec makes offender N+1 fail `sbt test` at introduction
-  * time. It recomputes every registered query's smell stats
-  * (SortAggregate count, codegen-fallback classes, max expression tree)
-  * from the pre-adaptive physical plan and diffs them against the
+  * time. It takes every registered query's smell stats (SortAggregate
+  * count, codegen-fallback classes, max expression tree) over the
+  * pre-adaptive physical plan from the suite's one registry walk
+  * ([[RegistrySweep]]) and diffs them against the
   * committed `PLAN_SMELLS_BASELINE.json` under PlanSmells.violations'
   * rules. The five inherent sort_agg rows (collation grouping,
   * streaming state, 1-row XML/JSON/DDL frames) and the deliberate
@@ -17,7 +18,7 @@ import org.apache.spark.sql.functions._
   * fails on what is NEW.
   *
   * Baseline update (a decision, not a reflex — review the diff first):
-  *   sbt "runMain graft.PlanSmells /root/testdata/sf0.001 PLAN_SMELLS_BASELINE.json"
+  *   sbt "runMain graft.Inspect smells /root/testdata/sf0.001 PLAN_SMELLS_BASELINE.json"
   *
   * Gate proof: the planted-regression test below rebuilds the exact
   * round-12 trap (max_by with a struct ordering buffer) and asserts the
@@ -28,16 +29,15 @@ class PlanSmellsGateSpec extends SparkSpec {
 
   // resolved relative to the build's working directory (sbt sets
   // user.dir to the project root), so the gate works from any checkout
-  // location, not just /root/repo (ADVICE r13)
+  // location
   private lazy val baseline = PlanSmells.parseBaseline(
     java.nio.file.Paths.get(sys.props("user.dir"),
       "PLAN_SMELLS_BASELINE.json").toString)
   private lazy val fbUnion = baseline.values.flatMap(_.fallbacks).toSet
 
   test("no registered query regresses vs the committed plan-smell baseline") {
-    val stats = PlanSmells.statsFor(spark, sf)
-    val bad = stats.flatMap { case (name, s) =>
-      PlanSmells.violations(name, s, baseline, fbUnion)
+    val bad = RegistrySweep.facts(spark, sf).flatMap { case (name, f) =>
+      PlanSmells.violations(name, f.smells, baseline, fbUnion)
     }
     assert(bad.isEmpty, "\n" + bad.mkString("\n") +
       "\nIf deliberate, regenerate PLAN_SMELLS_BASELINE.json (see scaladoc).")

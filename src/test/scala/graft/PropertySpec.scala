@@ -269,7 +269,7 @@ class PropertySpec extends SparkSpec {
     for (trial <- 1 to 3) {
       val rows = sample(Gen.listOfN(20,
         Gen.zip(Gen.chooseNum(1L, 999L), Gen.oneOf("a", "b", "c"))), 300L + trial)
-      val out = "/root/repo/target/scratch/prop_roundtrip"
+      val out = s"${Tables.scratchRoot}/prop_roundtrip"
       rows.toDF("v", "part").write.mode("overwrite")
         .partitionBy("part").parquet(out)
       val back = spark.read.parquet(out)

@@ -378,7 +378,7 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
-    val outJson = args.lift(2).getOrElse("/root/repo/BENCH_scale10.json")
+    val outJson = args.lift(2).getOrElse("BENCH_scale10.json")
     val scaledDir = s"${Tables.scratchRoot}/scale$copies"
     val cpus = GraftSession.defaultCpus
     // spill counters (constrained-heap smoke mandate: a memory-bounded
@@ -1046,16 +1046,12 @@ object ScaleStress {
       }
     val loadAfter = loadavg()
     def arr(xs: Seq[Double]) = xs.mkString("[", ",", "]")
-    val errJson = errors.map { case (k, v) =>
-      "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") +
-        "\""
-    }.mkString("{", ",", "}")
-    val skipJson = skipped.map { case (k, v) =>
-      "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") +
-        "\""
-    }.mkString("{", ",", "}")
+    def obj(m: Iterable[(String, String)]) =
+      m.map { case (k, v) => Json.str(k) + ":" + Json.str(v) }.mkString("{", ",", "}")
+    val errJson = obj(errors)
+    val skipJson = obj(skipped)
     val json =
-      s"""{"base":"$baseDir","copies":$copies,""" +
+      s"""{"base":${Json.str(baseDir)},"copies":$copies,""" +
       s""""queries":{${rowsOut.result()}},"errors":$errJson,""" +
       s""""skipped":$skipJson$candJson$semCellJson$twoStageJson""" +
       s"""$bimodalJson$phashGateJson""" +

@@ -168,12 +168,10 @@ object ServeParity {
       println(s"[ep2] $name -> ${results(name)}")
     }
     conn.close(); server.stop()
-    def q(s: String) = "\"" + s.replace("\\", "\\\\")
-      .replace("\"", "\\\"") + "\""
-    val body = results.map { case (k, v) => s"  ${q(k)}: ${q(v)}" }
+    val body = results.map { case (k, v) => s"  ${Json.str(k)}: ${Json.str(v)}" }
       .mkString(",\n")
     Files.writeString(Paths.get(outJson),
-      s"""{"sf": ${q(dir)}, "total": ${results.size}, """ +
+      s"""{"sf": ${Json.str(dir)}, "total": ${results.size}, """ +
         s""""matched": $matched, "exempt": $exempted, """ +
         s""""failed": $failed, "queries": {\n$body\n}}\n""")
     println(s"[ep2] total=${results.size} matched=$matched " +

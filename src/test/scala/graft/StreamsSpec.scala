@@ -62,7 +62,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("file source with cleanSource=archive moves consumed files (S12)") {
-    val base = Paths.get("/root/repo/target/scratch/cleansource")
+    val base = Paths.get(s"${Tables.scratchRoot}/cleansource")
     val srcDir = base.resolve("incoming")
     val archiveDir = base.resolve("processed")
     val ckpt = base.resolve("ckpt")
@@ -287,7 +287,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("foreachBatch sink writes each micro-batch transactionally") {
-    val base = Paths.get("/root/repo/target/scratch/foreachbatch")
+    val base = Paths.get(s"${Tables.scratchRoot}/foreachbatch")
     if (Files.exists(base)) {
       Files.walk(base).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.delete(p))
@@ -451,7 +451,7 @@ class StreamsSpec extends SparkSpec {
       "maintaining the additive LM state per micro-batch reproduces " +
       "the batch query's prefix-3 ranking exactly") {
     import org.apache.spark.sql.functions._
-    val base = Paths.get("/root/repo/target/scratch/dsir_incr")
+    val base = Paths.get(s"${Tables.scratchRoot}/dsir_incr")
     if (Files.exists(base)) {
       Files.walk(base).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.delete(p))

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object TwoStageGateProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/scratch/scale10")
-    val outJson = args.lift(1).getOrElse("/root/repo/BENCH_gate_sweep_r14.json")
+    val dir = args.headOption.getOrElse(s"${Tables.scratchRoot}/scale10")
+    val outJson = args.lift(1).getOrElse("BENCH_gate_sweep_r14.json")
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -41,4 +41,12 @@ class VerifySpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$out/fine/_ERROR.txt")))
     assert(spark.read.parquet(s"$out/fine").count() == 5)
   }
+
+  test("Json.str round-trips quotes, backslashes and control characters") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (s <- Seq("say \"hi\"", "C:\\tmp", "a\tb", "line\r\nnext",
+        "bell\u0001", "all \" \\ \t \r \u0001 \u001f end", ""))
+      assert(mapper.readTree(Json.str(s)).asText() == s,
+        s"${Json.str(s)} does not parse back to its input")
+  }
 }
