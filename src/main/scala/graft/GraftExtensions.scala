@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import graft.functions.{CosineSim, LshBucket, MinHashSig, NGramsGenerator, RollingHash}
+import graft.plans.ParamLiterals
 
 /** The engine's custom SQL functions, declared once in `functions` and
   * installed once per session at build time by `class GraftExtensions`.
@@ -16,6 +19,11 @@ import graft.functions.{CosineSim, LshBucket, MinHashSig, NGramsGenerator, Rolli
   * micro-batch clones, and `newSession()` sessions such as the Thrift
   * server's. That is what lets BI clients, which send SQL text and cannot
   * call Scala, use the same functions the DataFrame queries do.
+  *
+  * The same install adds the engine's planner pieces: the as-of join
+  * strategy and its pruning rule, and [[graft.plans.ParamLiterals]],
+  * which keeps filter constants out of generated class text so statements
+  * that differ only in their parameters reuse one compiled class.
   */
 object GraftExtensions {
   /** Spark ships BloomFilterAggregate / BloomFilterMightContain as
@@ -127,5 +135,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // column-prunes through it (Catalyst can't see inside custom nodes)
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PruneAsofJoinColumns)
+    // filter constants as class references: one compile per statement
+    // shape (this hook runs with and without AQE; see ParamLiterals)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
+    })
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 
 /** The one inspection main over the registered queries. The session
@@ -9,8 +11,10 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   *   time <sfDir> [--explain] <query...>: construct (eager driver jobs
   *     while the DataFrame is built) / plan / exec (noop sink) split, two
-  *     rounds per query so JIT warm-up shows; `--explain` then prints the
-  *     final executed plan.
+  *     rounds per query so JIT warm-up shows, each with the classes
+  *     Janino compiled in it (`compiles=`, `compile_ms=`; a round-2
+  *     compile is a class whose text changed between rounds); `--explain`
+  *     then prints the final executed plan.
   *   dump <sfDir> <outDir> <suffix> [query...]: `explain("formatted")` to
   *     `<outDir>/<query>_<suffix>.txt` (default: every query). Runs only
   *     the eager rounds some queries (pagerank, bfs) run while built.
@@ -36,6 +40,8 @@ object Inspect {
     val explain = args.contains("--explain")
     for (name <- args.tail.filterNot(_ == "--explain")) {
       for (round <- 1 to 2) {
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         val df = SparkEntry.queries(name)(spark, sfDir)
         val t1 = System.nanoTime() // construction (may run eager BSP jobs)
@@ -45,7 +51,9 @@ object Inspect {
         val t3 = System.nanoTime()
         println(f"[plantime] $name r$round construct=${(t1 - t0) / 1e9}%.2f " +
           f"plan=${(t2 - t1) / 1e9}%.2f exec=${(t3 - t2) / 1e9}%.2f " +
-          f"total=${(t3 - t0) / 1e9}%.2f")
+          f"total=${(t3 - t0) / 1e9}%.2f " +
+          s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
+          f"compile_ms=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.1f")
         spark.catalog.clearCache()
       }
       if (explain) {

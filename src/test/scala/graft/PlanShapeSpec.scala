@@ -262,7 +262,6 @@ class PlanShapeSpec extends SparkSpec {
     // Allowed: windows over frames whose cardinality a LITERAL bounds
     // (invisible to the structural walk) — each entry names its bound
     val boundedWindowAllowed = Set(
-      "ml_cv_3fold_linreg", // 3-row fold-stats frame (fold = key % 3)
       "quality_benford") // ≤9-row digit histogram (lead_digit ∈ 1..9)
     val bad = sweep.collect {
       case (name, f) if f.unboundedWindows > 0 && !boundedWindowAllowed(name) =>
@@ -289,17 +288,10 @@ class PlanShapeSpec extends SparkSpec {
       "sim_pq_adc", // broadcast 128-row codebook + 1280-row query LUT
       "ml_kmeans_fixed_iters", // broadcast 1-row (k=3 wide) centroid table
       "ml_logreg_gd", // broadcast 1-row weight state per GD step
-      "ml_linreg_two_features", // single-row sums joined to nothing (agg only)
       "ml_standardize_features", // broadcast 1-row global stats
-      "ml_tree_hist_depth2", // broadcast 1-row best-split model state
-      "ml_tree_r2", // broadcast 1-row root split + 4-row leaf means
-      "ml_forest_bagged", // 3× broadcast tree state (1-row/2-row/4-row)
-      "ml_gbt_stumps", // broadcast 1-row stump model per boosting round
-      "ml_pca_power_iter", // broadcast 1-row count into the d²-cell frame
       "ml_ab_test_ztest", // 1-row variant A × 1-row variant B readout
       "ml_calibration_bins", // broadcast 1-row max into the binning scan
       "ml_chi2_feature_assoc", // broadcast 1-row totals into 15 cells
-      "pipeline_model_eval", // broadcast 1-row stump + train-count rows
       "agg_bitmap_exact_distinct", // 1-row bitmap total × 1-row direct
       "curate_unigram_logprob", // broadcast 1-row corpus token total
       "curate_dsir_resample", // broadcast 1-row LM totals into ≤1024-row LM
