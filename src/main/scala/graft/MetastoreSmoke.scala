@@ -37,11 +37,7 @@ object MetastoreSmoke {
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("write") =>
       val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-      def rm(x: java.io.File): Unit = {
-        if (x.isDirectory) x.listFiles().foreach(rm)
-        x.delete(); ()
-      }
-      rm(new java.io.File(base))
+      Tables.rmTree(new java.io.File(base))
       new java.io.File(base).mkdirs()
       val s = session()
       s.sparkContext.setLogLevel("WARN")

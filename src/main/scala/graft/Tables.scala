@@ -29,13 +29,16 @@ object Tables {
     * table's ~5 consumers per query is the legitimate part of the
     * design and is unchanged). */
   def wipeDerivedScratch(): Unit =
-    for (sub <- Seq("phash_fp", "ann_index")) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) { val l = f.listFiles; if (l != null) l.foreach(rm) }
-        f.delete(); ()
-      }
-      rm(new java.io.File(s"$scratchRoot/$sub"))
-    }
+    for (sub <- Seq("phash_fp", "ann_index"))
+      rmTree(new java.io.File(s"$scratchRoot/$sub"))
+
+  /** Recursive delete; a missing path is a no-op. listFiles() is null
+    * for a plain file, a missing path or an I/O error, hence the guard. */
+  def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete()
+    ()
+  }
 
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",

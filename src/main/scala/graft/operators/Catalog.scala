@@ -27,18 +27,13 @@ object Catalog extends QueryModule {
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)
 
-  private def dropWithLocation(s: SparkSession, tbl: String): Unit = {
+  private[graft] def dropWithLocation(s: SparkSession, tbl: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     // the in-memory catalog is per-session but the warehouse DIRECTORY
     // outlives it — a fresh session's CREATE hits LOCATION_ALREADY_EXISTS
     // on a stale dir unless it is removed with the catalog entry
-    val loc = new java.io.File(
-      new java.net.URI(s.conf.get("spark.sql.warehouse.dir") + s"/$tbl"))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    if (loc.exists()) rm(loc)
+    Tables.rmTree(new java.io.File(
+      new java.net.URI(s.conf.get("spark.sql.warehouse.dir") + s"/$tbl")))
   }
 
   /** Full DDL+DML lifecycle for the two catalog dims; idempotent (each

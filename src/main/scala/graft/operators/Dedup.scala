@@ -325,340 +325,61 @@ object Dedup extends QueryModule {
         round(jac, 6).as("jaccard"))
   }
 
-  /** Batch-decomposed ingest-time verdict frame (doc, near_dup_of) for
-    * the text corpus — the arrival-order (akey = batch·2⁴⁰ + id,
-    * batch = id % 3) min_by aggregate over the gated MinHash pair set,
-    * shared by dedup_minhash_incremental (emits it per doc) and
-    * dedup_minhash_keepers_incremental (chases it to roots). */
-  private[graft] def minhashArrivalVerdicts(s: SparkSession, dir: String)
-      : DataFrame = {
-    val pairs = minhashPairs(s, dir)
-    val arr = t(s, dir, "documents").select(col("doc_id"),
-      (pmod(col("doc_id"), lit(3L)) * lit(1099511627776L) +
-        col("doc_id")).as("akey"))
-    val dirn = pairs
-      .join(arr.select(col("doc_id").as("id_a"),
-        col("akey").as("akey_a")), "id_a")
-      .join(arr.select(col("doc_id").as("id_b"),
-        col("akey").as("akey_b")), "id_b")
-      .select(
-        when(col("akey_a") < col("akey_b"), col("id_b"))
-          .otherwise(col("id_a")).as("doc"),
-        when(col("akey_a") < col("akey_b"), col("id_a"))
-          .otherwise(col("id_b")).as("blocker"),
-        least(col("akey_a"), col("akey_b")).as("bakey"))
-    dirn.groupBy("doc")
-      .agg(min_by(col("blocker"), col("bakey")).as("near_dup_of"))
-  }
-
-  /** Rewrite a manifest-committed state root to a bounded file count —
-    * the ingest indexes' maintenance step (round-13 verdict task 4):
-    * each micro-batch appends one file set, so under real continuous
-    * ingest a postings root becomes the small-files problem the batch
-    * `compact_small_files` operator exists to fix. Round-15 (r14
-    * verdict task 4 + ADVICE): the commit moved from delete+rename —
-    * atomic on local FS only, and crash-lossy between the rm and the
-    * rename — onto [[StateManifest.replace]]'s manifest-pointer swap
-    * (data first, manifest last), which is the snapshot family's
-    * protocol and holds on S3A semantics too. */
-  private[graft] def compactStateDir(s: SparkSession, path: String,
-      nFiles: Int): Unit =
-    StateManifest.read(s, path).foreach { df =>
-      StateManifest.replace(s, path, df, "compact", nFiles)
-    }
-
-  /** Fold a verdict-contribution log to its retained minimum — at most
-    * one row per doc, the (blocker, bakey) of the winning (lowest-akey)
-    * contribution. min_by is associative, so folding mid-stream can
-    * never change a final verdict; contributions that already lost are
-    * the rows the fold drops. Round-15 (r14 verdict task 7): an
-    * optional retention TTL additionally drops the verdicts of docs
-    * whose own ingest batch (`dseq`, stamped at append) has aged out of
-    * the last `retainBatches` batches — the policy bound that keeps
-    * unbounded-corpus verdict state finite (the snapshot family's
-    * vacuum-retention stance); verdicts inside the retained window are
-    * untouched because a doc's contributions all arrive in its own
-    * batch (StreamsSpec pins both halves). Commits via the same
-    * manifest swap as [[compactStateDir]]. */
-  private[graft] def retainContribs(s: SparkSession, path: String,
-      nFiles: Int, retainBatches: Int = 0, curSeq: Long = -1L): Unit =
-    StateManifest.read(s, path).foreach { df =>
-      val folded = df.groupBy("doc")
-        .agg(min_by(col("blocker"), col("bakey")).as("blocker"),
-          min(col("bakey")).as("bakey"), min(col("dseq")).as("dseq"))
-      val kept =
-        if (retainBatches > 0 && curSeq >= 0)
-          folded.filter(col("dseq") > curSeq - retainBatches)
-        else folded
-      StateManifest.replace(s, path, kept, "retain", nFiles)
-    }
-
-  /** The REAL online form of dedup_minhash_incremental (spec driver —
-    * StreamsSpec pins its parity with the registered batch-decomposed
-    * query): a file-source micro-batch stream over 3 file drops
-    * (doc_id % 3), foreachBatch maintaining a persisted band-postings
-    * index in parquet. Per batch: band-frame the arrivals (corpus-wide
-    * banding config — batch keys must live in the index's key space),
-    * meet them against index ∪ batch on (band_id, bkey), gate to the
-    * minimal agreeing band, Jaccard-verify, DIRECT each discovered pair
-    * by arrival key (seq · 2⁴⁰ + doc_id, where seq is the micro-batch
-    * sequence number PERSISTED on every postings row — round-13 verdict
-    * task 3: the direction derives from state, never from the id), and
-    * append the directed verdict contributions and the batch's
-    * postings. Each unordered pair is discovered exactly once — in the
-    * batch where its later-PROCESSED member arrives — and every verdict
-    * is final at ingest (a doc's contributions all arrive in its own
-    * batch): append-mode semantics, nothing revised. Maintenance:
-    * every `compactEvery` batches the postings dir is rewritten to a
-    * bounded file count and the contribution log is folded to its
-    * retained minimum (≤1 row/doc) — min_by associativity makes both
-    * verdict-invariant (StreamsSpec pins it). `hashSplit` builds the
-    * file drops by xxhash64(doc_id) % 3 instead of doc_id % 3, so specs
-    * can prove nothing leans on batch membership being derivable from
-    * the id. Returns (verdict frame, micro-batch count). */
+  /** The online form of dedup_minhash_incremental on the
+    * [[PostingsIngest]] loop: band postings under the corpus-wide
+    * banding config (batch keys must live in the index's key space),
+    * met on (band_id, bkey), gated to the minimal agreeing band and
+    * Jaccard-verified. `compactEvery` = 0 disables maintenance;
+    * `retainBatches` > 0 is the contribution-log TTL. */
   private[graft] def minhashIndexIngest(s: SparkSession, dir: String,
       stateRoot: String, scrambleOrder: Boolean = false,
-      hashSplit: Boolean = false, compactEvery: Int = 2,
-      compactFiles: Int = 1, retainBatches: Int = 0): (DataFrame, Int) = {
-    import org.apache.spark.sql.streaming.Trigger
-    val docs = t(s, dir, "documents").select("doc_id", "text")
+      hashSplit: Boolean = false,
+      compactEvery: Int = PostingsIngest.CompactEvery,
+      retainBatches: Int = 0): (DataFrame, Int) = {
     val (perms, bands, rows) = minhashConfig(
       Tables.footerRowCount(s, s"$dir/documents.parquet"))
-    def splitKey(c: Column): Column =
-      if (hashSplit) pmod(xxhash64(c), lit(3L)) else pmod(c, lit(3L))
-    for (b <- 0 to 2)
-      docs.filter(splitKey(col("doc_id")) === b)
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateRoot/in/b$b")
-    // scrambleOrder: force the file source to process b2, b0, b1 (the
-    // source orders by modification time) — the adversarial case for
-    // the state-derived direction: the persisted seq then reflects the
-    // scrambled processing order, and the verdict table must equal the
-    // batch-global recomputation from that SAME persisted state
-    if (scrambleOrder) {
-      val now = System.currentTimeMillis()
-      for ((b, i) <- Seq(2 -> 0, 0 -> 1, 1 -> 2)) {
-        val d = new java.io.File(s"$stateRoot/in/b$b")
-        d.listFiles().foreach(_.setLastModified(now - 300000L + i * 60000L))
-      }
+    val jac = meetingJaccard
+    PostingsIngest.run(s, stateRoot,
+      t(s, dir, "documents").select("doc_id", "text"), "doc_id",
+      scrambleOrder, hashSplit, compactEvery, retainBatches)(
+      minhashBandFrameOf(_, perms, bands, rows)) { (un, batch) =>
+      // the parquet roundtrip (and the union with it) drops the
+      // arrays' containsNull=false, which the strict codegen
+      // primitives (sorted_intersect_size, positional_any_equal)
+      // require at analysis time — the coalesce never fires but
+      // makes the lambda provably non-nullable again
+      val xs = un.select(col("doc_id"),
+        transform(col("hs"), x => coalesce(x, lit(0L))).as("hs"),
+        col("band_id"), col("bkey"),
+        transform(col("pre"), x => coalesce(x, lit(0L))).as("pre"),
+        col("seq"), col("in_index"))
+      PostingsIngest.meet(xs, batch, "doc_id",
+        col("x.band_id") === col("y.band_id") &&
+          col("x.bkey") === col("y.bkey"),
+        firstAgreeingBand && jac >= 0.2)
     }
-    val postDir = s"$stateRoot/postings"
-    val contribDir = s"$stateRoot/verdicts"
-    def akey(seq: Column, d: Column): Column =
-      seq * lit(1099511627776L) + d
-    val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stateRoot/in/*")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val frame = minhashBandFrameOf(batch, perms, bands, rows)
-          .withColumn("seq", lit(batchId)).persist()
-        val idx = StateManifest.read(s, postDir).getOrElse(frame.limit(0))
-        // the parquet roundtrip (and the union with it) drops the
-        // arrays' containsNull=false, which the strict codegen
-        // primitives (sorted_intersect_size, positional_any_equal)
-        // require at analysis time — the coalesce never fires but
-        // makes the lambda provably non-nullable again
-        val un = idx.withColumn("in_index", lit(true))
-          .unionByName(frame.withColumn("in_index", lit(false)))
-          .select(col("doc_id"),
-            transform(col("hs"), x => coalesce(x, lit(0L))).as("hs"),
-            col("band_id"), col("bkey"),
-            transform(col("pre"), x => coalesce(x, lit(0L))).as("pre"),
-            col("seq"), col("in_index"))
-        val jac = meetingJaccard
-        // new-vs-index meetings in either id order (the index doc is
-        // always the x side, seen once); new-vs-new once via id order.
-        // Direction: each side's akey uses ITS OWN seq — the index
-        // side's comes from the persisted postings row
-        val contribs = frame.as("y")
-          .join(un.as("x"),
-            col("x.band_id") === col("y.band_id") &&
-              col("x.bkey") === col("y.bkey") &&
-              (col("x.in_index") || col("x.doc_id") < col("y.doc_id")))
-          .filter(firstAgreeingBand && jac >= 0.2)
-          .select(col("x.doc_id").as("xa"), col("y.doc_id").as("ya"),
-            akey(col("x.seq"), col("x.doc_id")).as("ka"),
-            akey(col("y.seq"), col("y.doc_id")).as("kb"))
-          .select(
-            when(col("ka") < col("kb"), col("ya"))
-              .otherwise(col("xa")).as("doc"),
-            when(col("ka") < col("kb"), col("xa"))
-              .otherwise(col("ya")).as("blocker"),
-            least(col("ka"), col("kb")).as("bakey"),
-            // the doc's OWN ingest batch — the retention TTL's clock
-            lit(batchId).as("dseq"))
-        // manifest commits (round-15): data files first, manifest
-        // last; the batch tag makes a foreachBatch replay after any
-        // crash point a no-op instead of a double-append
-        StateManifest.append(s, contribDir, contribs, s"b$batchId")
-        StateManifest.append(s, postDir, frame, s"b$batchId")
-        frame.unpersist()
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          // compactFiles defaults to 1 at this fixture scale; a
-          // production deployment sizes it to state volume (files ~
-          // bytes / maxPartitionBytes), which stays bounded either way
-          compactStateDir(s, postDir, nFiles = compactFiles)
-          retainContribs(s, contribDir, nFiles = compactFiles,
-            retainBatches = retainBatches, curSeq = batchId)
-          // tag-horizon prune (r15 verdict task 4): every batch below
-          // the one executing is streaming-checkpoint-committed, so its
-          // tag can never be replayed — drop it from the manifest
-          StateManifest.pruneBatchTagsBelow(postDir, batchId)
-          StateManifest.pruneBatchTagsBelow(contribDir, batchId)
-        }
-        nBatches.incrementAndGet()
-        ()
-      }
-      .option("checkpointLocation", s"$stateRoot/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val contrib = StateManifest.read(s, contribDir).getOrElse(
-      s.range(0).select(col("id").as("doc"), col("id").as("blocker"),
-        col("id").as("bakey")))
-    val v = contrib.groupBy("doc")
-      .agg(min_by(col("blocker"), col("bakey")).as("near_dup_of"))
-    // the batch column comes from the persisted postings state, not
-    // from any arithmetic on the id (distinct: the band postings carry
-    // one row per (doc, band))
-    val out = StateManifest.read(s, postDir).get
-      .select(col("doc_id"), col("seq").as("batch")).distinct()
-      .join(v, col("doc_id") === col("doc"), "left")
-      .select(col("doc_id"), col("batch"), col("near_dup_of"),
-        col("near_dup_of").isNull.as("is_novel"))
-      .orderBy("doc_id")
-    (out, nBatches.get)
   }
 
-  /** The REAL online form of sim_ivf_incremental (spec driver —
-    * StreamsSpec pins its parity with the registered batch-decomposed
-    * query): a file-source micro-batch stream over 3 drops of the
-    * planted corpus (vec_id % 3), foreachBatch maintaining a persisted
-    * IVF postings index — (vec_id, cell, vec) inverted lists — in
-    * parquet. Per batch: cell-assign the arrivals under the FROZEN
-    * quantizer (one broadcast codebook row, built once outside the
-    * stream — the production shape: IVF quantizers are trained offline
-    * and never drift under ingest), meet them against index ∪ batch on
-    * the cell id, exact-cosine-verify (≥ 0.95), DIRECT each discovered
-    * pair by arrival key (seq · 2⁴⁰ + vec_id, where seq is the
-    * micro-batch sequence number PERSISTED on every postings row —
-    * round-13 verdict task 3: the direction derives from state, never
-    * from the id), append the directed verdict contributions and the
-    * batch's postings. Each unordered pair is discovered exactly once —
-    * in the batch where its later-PROCESSED member arrives — and every
-    * verdict is final at ingest (a vector's contributions all arrive in
-    * its own batch): append-mode semantics, nothing revised.
-    * Maintenance: every `compactEvery` batches the postings dir is
-    * rewritten to a bounded file count and the contribution log is
-    * folded to its retained minimum (≤1 row/doc) — min_by associativity
-    * makes both verdict-invariant (StreamsSpec pins it). `hashSplit`
-    * builds the drops by xxhash64(vec_id) % 3 so specs can prove
-    * nothing leans on batch membership being derivable from the id.
-    * Returns (verdict frame, micro-batch count). */
+  /** The online form of sim_ivf_incremental on the [[PostingsIngest]]
+    * loop: (vec_id, vec, cell) postings under the FROZEN quantizer (one
+    * broadcast codebook row, built once outside the stream — IVF
+    * quantizers are trained offline and never drift under ingest), met
+    * on the cell, exact-cosine-verified (≥ 0.95). `compactEvery` = 0
+    * disables maintenance. */
   private[graft] def ivfIndexIngest(s: SparkSession, dir: String,
       stateRoot: String, scrambleOrder: Boolean = false,
-      hashSplit: Boolean = false, compactEvery: Int = 2,
-      compactFiles: Int = 1, retainBatches: Int = 0): (DataFrame, Int) = {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.functions.VectorExprs
-    val corpus = embPlantedCorpus(s, dir)
+      hashSplit: Boolean = false,
+      compactEvery: Int = PostingsIngest.CompactEvery): (DataFrame, Int) = {
     val k = semCellCount(
       Tables.footerRowCount(s, s"$dir/embeddings.parquet") * 6 / 5)
     val cb = semCellCodebook(s, dir, k)
-    def splitKey(c: Column): Column =
-      if (hashSplit) pmod(xxhash64(c), lit(3L)) else pmod(c, lit(3L))
-    for (b <- 0 to 2)
-      corpus.filter(splitKey(col("vec_id")) === b)
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateRoot/in/b$b")
-    // scrambleOrder: force the file source to process b2, b0, b1 (the
-    // source orders by modification time) — the adversarial case for
-    // the state-derived direction: the persisted seq then reflects the
-    // scrambled processing order, and the verdict table must equal the
-    // batch-global recomputation from that SAME persisted state
-    if (scrambleOrder) {
-      val now = System.currentTimeMillis()
-      for ((b, i) <- Seq(2 -> 0, 0 -> 1, 1 -> 2)) {
-        val d = new java.io.File(s"$stateRoot/in/b$b")
-        d.listFiles().foreach(_.setLastModified(now - 300000L + i * 60000L))
-      }
+    val cos = graft.functions.VectorExprs.cosine(col("x.vec"), col("y.vec"))
+    PostingsIngest.run(s, stateRoot, embPlantedCorpus(s, dir), "vec_id",
+      scrambleOrder, hashSplit, compactEvery)(semCellAssign(_, cb)) {
+      (un, batch) =>
+        PostingsIngest.meet(un, batch, "vec_id",
+          col("x.cell") === col("y.cell"), round(cos, 6) >= 0.95)
     }
-    val postDir = s"$stateRoot/postings"
-    val contribDir = s"$stateRoot/verdicts"
-    def akey(seq: Column, v: Column): Column =
-      seq * lit(1099511627776L) + v
-    val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = s.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stateRoot/in/*")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val frame = semCellAssign(batch, cb)
-          .withColumn("seq", lit(batchId)).persist()
-        val idx = StateManifest.read(s, postDir).getOrElse(frame.limit(0))
-        val un = idx.withColumn("in_index", lit(true))
-          .unionByName(frame.withColumn("in_index", lit(false)))
-        val cos = VectorExprs.cosine(col("x.vec"), col("y.vec"))
-        // new-vs-index meetings in either id order (the index vector is
-        // always the x side, seen once); new-vs-new once via id order.
-        // Direction: each side's akey uses ITS OWN seq — the index
-        // side's comes from the persisted postings row
-        val contribs = frame.as("y")
-          .join(un.as("x"),
-            col("x.cell") === col("y.cell") &&
-              (col("x.in_index") || col("x.vec_id") < col("y.vec_id")))
-          .filter(round(cos, 6) >= 0.95)
-          .select(col("x.vec_id").as("xa"), col("y.vec_id").as("ya"),
-            akey(col("x.seq"), col("x.vec_id")).as("ka"),
-            akey(col("y.seq"), col("y.vec_id")).as("kb"))
-          .select(
-            when(col("ka") < col("kb"), col("ya"))
-              .otherwise(col("xa")).as("doc"),
-            when(col("ka") < col("kb"), col("xa"))
-              .otherwise(col("ya")).as("blocker"),
-            least(col("ka"), col("kb")).as("bakey"),
-            // the doc's OWN ingest batch — the retention TTL's clock
-            lit(batchId).as("dseq"))
-        // manifest commits (round-15): data files first, manifest
-        // last; the batch tag makes a foreachBatch replay after any
-        // crash point a no-op instead of a double-append
-        StateManifest.append(s, contribDir, contribs, s"b$batchId")
-        StateManifest.append(s, postDir, frame, s"b$batchId")
-        frame.unpersist()
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          // compactFiles defaults to 1 at this fixture scale; a
-          // production deployment sizes it to state volume (files ~
-          // bytes / maxPartitionBytes), which stays bounded either way
-          compactStateDir(s, postDir, nFiles = compactFiles)
-          retainContribs(s, contribDir, nFiles = compactFiles,
-            retainBatches = retainBatches, curSeq = batchId)
-          // tag-horizon prune (r15 verdict task 4): every batch below
-          // the one executing is streaming-checkpoint-committed, so its
-          // tag can never be replayed — drop it from the manifest
-          StateManifest.pruneBatchTagsBelow(postDir, batchId)
-          StateManifest.pruneBatchTagsBelow(contribDir, batchId)
-        }
-        nBatches.incrementAndGet()
-        ()
-      }
-      .option("checkpointLocation", s"$stateRoot/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val contrib = StateManifest.read(s, contribDir).getOrElse(
-      s.range(0).select(col("id").as("doc"), col("id").as("blocker"),
-        col("id").as("bakey")))
-    val v = contrib.groupBy("doc")
-      .agg(min_by(col("blocker"), col("bakey")).as("near_dup_of"))
-    // the batch column comes from the persisted postings state, not
-    // from any arithmetic on the id
-    val out = StateManifest.read(s, postDir).get
-      .select(col("vec_id"), col("seq").as("batch"))
-      .join(v, col("vec_id") === col("doc"), "left")
-      .select(col("vec_id"), col("batch"), col("near_dup_of"),
-        col("near_dup_of").isNull.as("is_novel"))
-      .orderBy("vec_id")
-    (out, nBatches.get)
   }
 
   /** Band-join meeting count (join rows BEFORE the Jaccard filter) —
@@ -1381,7 +1102,7 @@ object Dedup extends QueryModule {
         FROM documents d LEFT JOIN v ON v.doc = d.doc_id
         ORDER BY d.doc_id"""),
       (s, dir) => {
-        val v = minhashArrivalVerdicts(s, dir)
+        val v = PostingsIngest.arrivalVerdicts(minhashPairs(s, dir))
         t(s, dir, "documents")
           .select(col("doc_id"), pmod(col("doc_id"), lit(3L)).as("batch"))
           .join(v, col("doc_id") === col("doc"), "left")
@@ -1435,7 +1156,7 @@ object Dedup extends QueryModule {
         FROM chase c JOIN par rp ON rp.m = c.p AND rp.p = c.p
         ORDER BY doc_id"""),
       (s, dir) => {
-        val v = minhashArrivalVerdicts(s, dir)
+        val v = PostingsIngest.arrivalVerdicts(minhashPairs(s, dir))
         val par = t(s, dir, "documents")
           .join(v, col("doc_id") === col("doc"), "left")
           .select(col("doc_id").as("m"),
@@ -1613,21 +1334,7 @@ object Dedup extends QueryModule {
           require(k == 16,
             s"sim_ivf_incremental: oracle SQL pins 16 centroids but " +
               s"semCellCount gave $k for $dir — pinned-config violation")
-        val pairs = semCellPairs(s, dir, k)
-          .select(col("id_a"), col("id_b"))
-        def akey(c: Column): Column =
-          pmod(c, lit(3L)) * lit(1099511627776L) + c
-        val dirn = pairs
-          .select(col("id_a"), col("id_b"),
-            akey(col("id_a")).as("akey_a"), akey(col("id_b")).as("akey_b"))
-          .select(
-            when(col("akey_a") < col("akey_b"), col("id_b"))
-              .otherwise(col("id_a")).as("doc"),
-            when(col("akey_a") < col("akey_b"), col("id_a"))
-              .otherwise(col("id_b")).as("blocker"),
-            least(col("akey_a"), col("akey_b")).as("bakey"))
-        val v = dirn.groupBy("doc")
-          .agg(min_by(col("blocker"), col("bakey")).as("near_dup_of"))
+        val v = PostingsIngest.arrivalVerdicts(semCellPairs(s, dir, k))
         embPlantedCorpus(s, dir)
           .select(col("vec_id"), pmod(col("vec_id"), lit(3L)).as("batch"))
           .join(v, col("vec_id") === col("doc"), "left")

@@ -224,33 +224,6 @@ object Multimodal extends QueryModule {
     StateManifest.read(s, root).get
   }
 
-  /** Batch-decomposed ingest-time verdict frame (doc, near_dup_of) for
-    * the media corpus — the arrival-order (akey = batch·2⁴⁰ + id,
-    * batch = id % 3) min_by aggregate over the gated pair set, shared
-    * by multimodal_phash_incremental (emits it per item) and
-    * multimodal_phash_keepers_incremental (chases it to roots). */
-  private[graft] def phashArrivalVerdicts(s: SparkSession, dir: String)
-      : DataFrame = {
-    val pairs = phashNearDupPairs(s, dir)
-    val universe = phashFingerprintsTable(s, dir).select("doc_id")
-    val arr = universe.select(col("doc_id"),
-      (pmod(col("doc_id"), lit(3L)) * lit(1099511627776L) +
-        col("doc_id")).as("akey"))
-    val dirn = pairs
-      .join(arr.select(col("doc_id").as("id_a"),
-        col("akey").as("akey_a")), "id_a")
-      .join(arr.select(col("doc_id").as("id_b"),
-        col("akey").as("akey_b")), "id_b")
-      .select(
-        when(col("akey_a") < col("akey_b"), col("id_b"))
-          .otherwise(col("id_a")).as("doc"),
-        when(col("akey_a") < col("akey_b"), col("id_a"))
-          .otherwise(col("id_b")).as("blocker"),
-        least(col("akey_a"), col("akey_b")).as("bakey"))
-    dirn.groupBy("doc")
-      .agg(min_by(col("blocker"), col("bakey")).as("near_dup_of"))
-  }
-
   /** The persisted (doc, slice) band frame with per-(si, sv) measured
     * occupancy joined on — the routing input for the gated pair join
     * (also consumed directly by DedupSpec's heterogeneity pin and the
@@ -470,142 +443,50 @@ object Multimodal extends QueryModule {
     * pins gate=0 / default / ∞ row-identical. */
   private[graft] val PhashBandOccupancyGate = 64L
 
-  /** The REAL online form of multimodal_phash_incremental (spec driver
-    * — StreamsSpec pins its parity with the registered batch-decomposed
-    * query): the media tier's instance of the foreachBatch postings
-    * pattern (round-14 verdict task 3; the text (MinHash) and embedding
-    * (IVF) instances live in Dedup.scala). A file-source micro-batch
-    * stream over 3 drops of the media fingerprints; foreachBatch
-    * maintains a persisted band-postings index — (doc_id, s0..s3, si,
-    * sv, cv, seq), 4 rows per media — committed via
-    * [[StateManifest]] manifests from day one (object-store-safe, batch
-    * tags make replays no-ops). Per batch: band-frame the arriving
-    * fingerprints, meet them against index ∪ batch on (si, sv) with the
-    * SAME measured-occupancy sub-band routing as the batch pipeline
-    * (occupancy over index ∪ batch — the domain the join actually runs
-    * in), Hamming-≤3-verify inside the join, DIRECT each discovered
-    * pair by arrival key (seq · 2⁴⁰ + doc_id, seq read FROM the
-    * persisted postings row — state-derived, never id arithmetic),
-    * min_by verdicts. Each unordered pair is discovered in the batch
-    * where its later-processed member arrives; band/sub-band
-    * multiplicity is folded by a per-batch distinct before the
-    * contribution append. Maintenance: every `compactEvery` batches the
-    * postings are compacted and the contribution log folded (+ optional
-    * `retainBatches` TTL — Dedup.retainContribs semantics). */
+  /** The online form of multimodal_phash_incremental on the
+    * [[PostingsIngest]] loop: (doc_id, s0..s3, si, sv, cv) band
+    * postings, 4 rows per media, met on (si, sv) under the SAME
+    * measured-occupancy sub-band routing as the batch pipeline, with
+    * occupancy measured over index ∪ batch (the domain the join
+    * actually runs in), Hamming-≤3-verified; a per-batch distinct folds
+    * band/sub-band multiplicity. */
   private[graft] def phashIndexIngest(s: SparkSession, dir: String,
       stateRoot: String, scrambleOrder: Boolean = false,
-      hashSplit: Boolean = false, compactEvery: Int = 2,
-      compactFiles: Int = 1, retainBatches: Int = 0,
-      gate: Long = PhashBandOccupancyGate): (DataFrame, Int) = {
-    import org.apache.spark.sql.streaming.Trigger
-    val fp = phashFingerprints(s, dir)
-    def splitKey(c: Column): Column =
-      if (hashSplit) pmod(xxhash64(c), lit(3L)) else pmod(c, lit(3L))
-    for (b <- 0 to 2)
-      fp.filter(splitKey(col("doc_id")) === b)
-        .coalesce(1).write.mode("overwrite").parquet(s"$stateRoot/in/b$b")
-    if (scrambleOrder) {
-      val now = System.currentTimeMillis()
-      for ((b, i) <- Seq(2 -> 0, 0 -> 1, 1 -> 2)) {
-        val d = new java.io.File(s"$stateRoot/in/b$b")
-        d.listFiles().foreach(_.setLastModified(now - 300000L + i * 60000L))
-      }
-    }
-    val postDir = s"$stateRoot/postings"
-    val contribDir = s"$stateRoot/verdicts"
-    def akey(seq: Column, d: Column): Column =
-      seq * lit(1099511627776L) + d
+      hashSplit: Boolean = false): (DataFrame, Int) = {
     val ham = Seq("s0", "s1", "s2", "s3").map(c =>
       bit_count(col(s"x.$c").bitwiseXOR(col(s"y.$c"))).cast("long"))
       .reduce(_ + _)
-    val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = s.readStream.schema(fp.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stateRoot/in/*")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val frame = phashBandFrameOf(batch)
-          .withColumn("seq", lit(batchId)).persist()
-        val idx = StateManifest.read(s, postDir).getOrElse(frame.limit(0))
-        val un = idx.withColumn("in_index", lit(true))
-          .unionByName(frame.withColumn("in_index", lit(false)))
-        // routing measured over the domain THIS join runs in (index ∪
-        // batch), recomputed per batch from state — the same two-stage
-        // decision as the batch pipeline (occupancy > gate AND the
-        // sub-slices actually split the bucket), broadcast keys, never
-        // an occ column riding the frame, never a cache under the join
-        val denseKeys = phashSubRouteKeys(un, gate)
-        def meet(xs: DataFrame, ys: DataFrame, subKeys: Boolean)
-            : DataFrame = {
-          val onKeys = col("x.si") === col("y.si") &&
-            col("x.sv") === col("y.sv") &&
-            (if (subKeys) col("x.ti") === col("y.ti") &&
-              col("x.tv") === col("y.tv") else lit(true)) &&
-            (col("x.in_index") || col("x.doc_id") < col("y.doc_id"))
-          xs.as("x").join(ys.as("y"), onKeys)
-            .withColumn("hamming", ham)
-            .filter(col("hamming") <= 3)
-            .select(col("x.doc_id").as("xa"), col("y.doc_id").as("ya"),
-              akey(col("x.seq"), col("x.doc_id")).as("ka"),
-              akey(col("y.seq"), col("y.doc_id")).as("kb"))
-        }
-        def subbed(d: DataFrame): DataFrame = d
-          .select(col("doc_id"), col("s0"), col("s1"), col("s2"),
-            col("s3"), col("si"), col("sv"), col("seq"), col("in_index"),
-            explode(array((0 to 3).map(t =>
-              struct(lit(t).as("ti"),
-                shiftrightunsigned(col("cv"), 12 * t)
-                  .bitwiseAND(lit(4095L)).as("tv"))): _*)).as("sb"))
-          .select(col("doc_id"), col("s0"), col("s1"), col("s2"),
-            col("s3"), col("si"), col("sv"), col("seq"), col("in_index"),
-            col("sb.ti"), col("sb.tv"))
-        val sparse = un.drop("cv")
-          .join(broadcast(denseKeys), Seq("si", "sv"), "left_anti")
-        val dense = un
-          .join(broadcast(denseKeys), Seq("si", "sv"), "left_semi")
-        val pairs = meet(sparse, sparse.filter(!col("in_index")), false)
-          .unionByName(
-            meet(subbed(dense), subbed(dense.filter(!col("in_index"))),
-              true))
-          .distinct()
-        val contribs = pairs.select(
-          when(col("ka") < col("kb"), col("ya"))
-            .otherwise(col("xa")).as("doc"),
-          when(col("ka") < col("kb"), col("xa"))
-            .otherwise(col("ya")).as("blocker"),
-          least(col("ka"), col("kb")).as("bakey"),
-          lit(batchId).as("dseq"))
-        StateManifest.append(s, contribDir, contribs, s"b$batchId")
-        StateManifest.append(s, postDir, frame, s"b$batchId")
-        frame.unpersist()
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          Dedup.compactStateDir(s, postDir, nFiles = compactFiles)
-          Dedup.retainContribs(s, contribDir, nFiles = compactFiles,
-            retainBatches = retainBatches, curSeq = batchId)
-          // tag-horizon prune (r15 verdict task 4): batches below the
-          // executing one are checkpoint-committed → unreplayable
-          StateManifest.pruneBatchTagsBelow(postDir, batchId)
-          StateManifest.pruneBatchTagsBelow(contribDir, batchId)
-        }
-        nBatches.incrementAndGet()
-        ()
-      }
-      .option("checkpointLocation", s"$stateRoot/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val contrib = StateManifest.read(s, contribDir).getOrElse(
-      s.range(0).select(col("id").as("doc"), col("id").as("blocker"),
-        col("id").as("bakey")))
-    val v = contrib.groupBy("doc")
-      .agg(min_by(col("blocker"), col("bakey")).as("near_dup_of"))
-    val out = StateManifest.read(s, postDir).get
-      .select(col("doc_id"), col("seq").as("batch")).distinct()
-      .join(v, col("doc_id") === col("doc"), "left")
-      .select(col("doc_id").as("media_id"), col("batch"),
-        col("near_dup_of"), col("near_dup_of").isNull.as("is_novel"))
-      .orderBy("media_id")
-    (out, nBatches.get)
+    val (out, n) = PostingsIngest.run(s, stateRoot,
+      phashFingerprints(s, dir), "doc_id", scrambleOrder, hashSplit)(
+      phashBandFrameOf) { (un, _) =>
+      // broadcast route keys recomputed per batch from state — the same
+      // two-stage decision as the batch pipeline, never an occ column
+      // riding the frame, never a cache under the join
+      val denseKeys = phashSubRouteKeys(un, PhashBandOccupancyGate)
+      def subbed(d: DataFrame): DataFrame = d
+        .select(col("doc_id"), col("s0"), col("s1"), col("s2"),
+          col("s3"), col("si"), col("sv"), col("seq"), col("in_index"),
+          explode(array((0 to 3).map(t =>
+            struct(lit(t).as("ti"),
+              shiftrightunsigned(col("cv"), 12 * t)
+                .bitwiseAND(lit(4095L)).as("tv"))): _*)).as("sb"))
+        .select(col("doc_id"), col("s0"), col("s1"), col("s2"),
+          col("s3"), col("si"), col("sv"), col("seq"), col("in_index"),
+          col("sb.ti"), col("sb.tv"))
+      val band = col("x.si") === col("y.si") && col("x.sv") === col("y.sv")
+      val sparse = un.drop("cv")
+        .join(broadcast(denseKeys), Seq("si", "sv"), "left_anti")
+      val dense = subbed(un
+        .join(broadcast(denseKeys), Seq("si", "sv"), "left_semi"))
+      PostingsIngest.meet(sparse, sparse.filter(!col("in_index")),
+        "doc_id", band, ham <= 3)
+        .unionByName(PostingsIngest.meet(dense,
+          dense.filter(!col("in_index")), "doc_id",
+          band && col("x.ti") === col("y.ti") &&
+            col("x.tv") === col("y.tv"), ham <= 3))
+        .distinct()
+    }
+    (out.withColumnRenamed("doc_id", "media_id"), n)
   }
 
   val all: Seq[Q] = Seq(
@@ -803,7 +684,7 @@ object Multimodal extends QueryModule {
         ORDER BY media_id"""),
       (s, dir) => {
         val universe = phashFingerprintsTable(s, dir).select("doc_id")
-        val v = phashArrivalVerdicts(s, dir)
+        val v = PostingsIngest.arrivalVerdicts(phashNearDupPairs(s, dir))
         universe
           .select(col("doc_id").as("media_id"),
             pmod(col("doc_id"), lit(3L)).as("batch"))
@@ -866,7 +747,7 @@ object Multimodal extends QueryModule {
         ORDER BY media_id"""),
       (s, dir) => {
         val universe = phashFingerprintsTable(s, dir).select("doc_id")
-        val v = phashArrivalVerdicts(s, dir)
+        val v = PostingsIngest.arrivalVerdicts(phashNearDupPairs(s, dir))
         val par = universe.join(v, col("doc_id") === col("doc"), "left")
           .select(col("doc_id").as("m"),
             coalesce(col("near_dup_of"), col("doc_id")).as("p"))

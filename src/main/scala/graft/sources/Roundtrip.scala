@@ -46,16 +46,8 @@ object Roundtrip extends QueryModule {
       // the in-memory catalog is per-session but the warehouse DIRECTORY
       // outlives it — drop both or a fresh session hits
       // LOCATION_ALREADY_EXISTS on a stale dir
-      for (tbl <- Seq("graft_li_bucketed", "graft_ord_bucketed")) {
-        s.sql(s"DROP TABLE IF EXISTS $tbl")
-        val loc = new java.io.File(
-          new java.net.URI(s.conf.get("spark.sql.warehouse.dir") + s"/$tbl"))
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        if (loc.exists()) rm(loc)
-      }
+      for (tbl <- Seq("graft_li_bucketed", "graft_ord_bucketed"))
+        graft.operators.Catalog.dropWithLocation(s, tbl)
       t(s, dir, "lineitem")
         .select("l_orderkey", "l_returnflag")
         .write.mode(SaveMode.Overwrite)

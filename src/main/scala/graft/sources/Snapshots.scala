@@ -31,11 +31,6 @@ import graft.Tables
   */
 object Snapshots {
 
-  private def wipe(f: File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(wipe)
-    f.delete(); ()
-  }
-
   private def parquetFilesUnder(dir: File): Seq[String] = {
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
@@ -406,7 +401,7 @@ object Snapshots {
   def buildDemoTable(s: SparkSession, dir: String,
       sub: String = "time_travel"): String = {
     val rootF = new File(s"${Tables.scratchRoot}/$sub")
-    wipe(rootF)
+    Tables.rmTree(rootF)
     rootF.mkdirs()
     val root = rootF.getAbsolutePath
 

@@ -49,15 +49,11 @@ private class UserAggProcessor
 
 object Streams extends QueryModule {
 
-  private def freshCheckpoint(name: String): String = {
+  private[graft] def freshCheckpoint(name: String): String = {
     val d = new java.io.File(s"${Tables.scratchRoot}/ckpt_$name")
     // AvailableNow + an old checkpoint would replay "no new files" and
     // leave the memory sink empty — each registered run starts clean.
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    if (d.exists()) rm(d)
+    Tables.rmTree(d)
     d.mkdirs()
     d.getAbsolutePath
   }

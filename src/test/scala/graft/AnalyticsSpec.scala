@@ -230,11 +230,7 @@ class AnalyticsSpec extends SparkSpec {
       assert(anyFile(ckpt), "checkpoint dir received no RDD snapshots")
     } finally {
       sys.props.remove("graft.checkpoint.dir")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(ckpt)
+      Tables.rmTree(ckpt)
     }
   }
 

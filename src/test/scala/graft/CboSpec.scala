@@ -17,16 +17,8 @@ class CboSpec extends SparkSpec {
 
   test("ANALYZE column stats flip a selectively-filtered join to broadcast") {
     val s = spark
-    for (tbl <- Seq("graft_cbo_orders", "graft_cbo_lineitem")) {
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new java.io.File(
-        new java.net.URI(s.conf.get("spark.sql.warehouse.dir") + s"/$tbl"))
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      if (loc.exists()) rm(loc)
-    }
+    for (tbl <- Seq("graft_cbo_orders", "graft_cbo_lineitem"))
+      operators.Catalog.dropWithLocation(s, tbl)
     Tables.load(s, sf, "orders").write.saveAsTable("graft_cbo_orders")
     Tables.load(s, sf, "lineitem").write.saveAsTable("graft_cbo_lineitem")
     s.sql("ANALYZE TABLE graft_cbo_orders COMPUTE STATISTICS FOR COLUMNS o_orderkey")

@@ -275,16 +275,8 @@ class StreamsSpec extends SparkSpec {
     }
   }
 
-  private def freshCheckpointForTest(name: String): String = {
-    val d = new java.io.File(s"${Tables.scratchRoot}/ckpt_spec_$name")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    if (d.exists()) rm(d)
-    d.mkdirs()
-    d.getAbsolutePath
-  }
+  private def freshCheckpointForTest(name: String): String =
+    streaming.Streams.freshCheckpoint(s"spec_$name")
 
   test("foreachBatch sink writes each micro-batch transactionally") {
     val base = Paths.get(s"${Tables.scratchRoot}/foreachbatch")
@@ -793,6 +785,20 @@ class StreamsSpec extends SparkSpec {
     // the pin is non-vacuous only if retention actually changed rows
     assert(allRows != ttlRows,
       "TTL run identical to keep-all — no doc actually expired")
+    // tag-horizon prune: maintaining every batch leaves each state
+    // root's manifest with only the last batch's tag, and a replay of
+    // that batch is still a no-op
+    val M = operators.StateManifest
+    for (b <- Seq(baseAll, baseTtl); sub <- Seq("postings", "verdicts")) {
+      val root = s"$b/$sub"
+      assert(M.appliedTags(root) == Set("b2"),
+        s"batch tags below the horizon survived in $root: " +
+          M.appliedTags(root))
+      val before = (M.currentVersion(root), M.read(spark, root).get.count())
+      M.append(spark, root, M.read(spark, root).get, "b2")
+      assert((M.currentVersion(root), M.read(spark, root).get.count()) ==
+        before, s"a replayed b2 changed the state in $root")
+    }
   }
 
   test("incremental MinHash index AvailableNow parity: a file-source " +
