@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import graft.functions.{CosineSim, LshBucket, MinHashSig, NGramsGenerator, RollingHash}
-import graft.plans.ParamLiterals
+import graft.plans.{ParamLiterals, SmallGlobalSort}
 
 /** The engine's custom SQL functions, declared once in `functions` and
   * installed once per session at build time by `class GraftExtensions`.
@@ -24,6 +24,15 @@ import graft.plans.ParamLiterals
   * strategy and its pruning rule, and [[graft.plans.ParamLiterals]],
   * which keeps filter constants out of generated class text so statements
   * that differ only in their parameters reuse one compiled class.
+  *
+  * It also adds [[graft.plans.SmallGlobalSort]], an adaptive query-stage
+  * preparation rule: a global `ORDER BY` whose materialized input stages
+  * sum to at most AQE's minimum partition size (1 MB) sorts behind a
+  * `Coalesce 1` instead of a range exchange, so it skips the exchange's
+  * sampling job and its shuffle-map stage. A BI statement that ends in
+  * `ORDER BY` over a few hundred rows runs two jobs fewer. Only AQE runs
+  * the rule, so non-adaptive sessions, streams and the pre-adaptive
+  * `sparkPlan` keep the range exchange.
   */
 object GraftExtensions {
   /** Spark ships BloomFilterAggregate / BloomFilterMightContain as
@@ -140,5 +149,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = ParamLiterals
     })
+    // a small global sort runs in one partition, without the range
+    // exchange's sampling job (AQE only, after EnsureRequirements)
+    ext.injectQueryStagePrepRule(_ => SmallGlobalSort)
   }
 }

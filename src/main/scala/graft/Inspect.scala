@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.{ListenerDrain, SparkContext}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
@@ -13,8 +16,9 @@ import org.apache.spark.sql.execution.FormattedMode
   *     while the DataFrame is built) / plan / exec (noop sink) split, two
   *     rounds per query so JIT warm-up shows, each with the classes
   *     Janino compiled in it (`compiles=`, `compile_ms=`; a round-2
-  *     compile is a class whose text changed between rounds); `--explain`
-  *     then prints the final executed plan.
+  *     compile is a class whose text changed between rounds) and the
+  *     Spark jobs it ran, construct and exec together (`jobs=`);
+  *     `--explain` then prints the final executed plan.
   *   dump <sfDir> <outDir> <suffix> [query...]: `explain("formatted")` to
   *     `<outDir>/<query>_<suffix>.txt` (default: every query). Runs only
   *     the eager rounds some queries (pagerank, bfs) run while built.
@@ -42,18 +46,21 @@ object Inspect {
       for (round <- 1 to 2) {
         val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val compileNs0 = CodeGenerator.compileTime
-        val t0 = System.nanoTime()
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val t1 = System.nanoTime() // construction (may run eager BSP jobs)
-        df.queryExecution.executedPlan // force analysis+optimization+planning
-        val t2 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        val t3 = System.nanoTime()
+        val ((t0, t1, t2, t3), jobs) = jobsDuring(spark.sparkContext) {
+          val t0 = System.nanoTime()
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          val t1 = System.nanoTime() // construction (may run eager BSP jobs)
+          df.queryExecution.executedPlan // force analysis+optimization+planning
+          val t2 = System.nanoTime()
+          df.write.mode("overwrite").format("noop").save()
+          (t0, t1, t2, System.nanoTime())
+        }
         println(f"[plantime] $name r$round construct=${(t1 - t0) / 1e9}%.2f " +
           f"plan=${(t2 - t1) / 1e9}%.2f exec=${(t3 - t2) / 1e9}%.2f " +
           f"total=${(t3 - t0) / 1e9}%.2f " +
           s"compiles=${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} " +
-          f"compile_ms=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.1f")
+          f"compile_ms=${(CodeGenerator.compileTime - compileNs0) / 1e6}%.1f " +
+          s"jobs=$jobs")
         spark.catalog.clearCache()
       }
       if (explain) {
@@ -63,6 +70,25 @@ object Inspect {
         spark.catalog.clearCache()
       }
     }
+  }
+
+  /** `body`'s result and the Spark jobs launched while it ran, counted by
+    * a listener; the bus is drained before and after, so earlier jobs do
+    * not reach the count and none of `body`'s are missed. */
+  private[graft] def jobsDuring[T](sc: SparkContext)(body: => T): (T, Int) = {
+    val jobs = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(counter)
+    try {
+      val result = body
+      ListenerDrain(sc)
+      (result, jobs.get)
+    } finally sc.removeSparkListener(counter)
   }
 
   private def dump(spark: SparkSession, args: Seq[String]): Unit = {

@@ -38,11 +38,6 @@ object Serve {
     * need. */
   def start(spark: SparkSession, sfDir: String)
       : org.apache.hive.service.server.HiveServer2 = {
-    // keep HiveServer2's embedded Derby session state out of the repo
-    // root; it belongs with the rest of the scratch output
-    if (sys.props.get("derby.system.home").isEmpty)
-      sys.props("derby.system.home") = s"${Tables.scratchRoot}/derby"
-    new java.io.File(s"${Tables.scratchRoot}/derby").mkdirs()
     Tables.registerViews(spark, sfDir)
     operators.Catalog.rebuildCatalogDims(spark, sfDir)
     // expose the experiment-tracking ledger (RunStore) when it exists —

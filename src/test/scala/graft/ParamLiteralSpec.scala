@@ -121,70 +121,8 @@ class ParamLiteralSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.adaptive.enabled")
   }
 
-  /** The dag_serve BI templates, in-process; `catalog_ledger` reads
-    * stand-in views with the ledger's columns. */
-  private val templates: Seq[(String, Random => String)] = Seq(
-    "revenue_by_region" -> { r =>
-      val y = 1995 + r.nextInt(4); val m = 1 + r.nextInt(10)
-      f"""SELECT r_name, date_format(l_shipdate, 'yyyy-MM') AS ship_month,
-         |  sum(CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS revenue_cents,
-         |  count(*) AS n_items
-         |FROM lineitem
-         |JOIN orders ON l_orderkey = o_orderkey
-         |JOIN customer ON o_custkey = c_custkey
-         |JOIN nation ON c_nationkey = n_nationkey
-         |JOIN region ON n_regionkey = r_regionkey
-         |WHERE l_shipdate >= TIMESTAMP '$y-$m%02d-01'
-         |  AND l_shipdate < TIMESTAMP '$y-$m%02d-01' + INTERVAL 3 MONTHS
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-    "segment_topk" -> { r =>
-      val y = 1995 + r.nextInt(4); val k = 3 + r.nextInt(8)
-      s"""WITH cs AS (
-         |  SELECT c_mktsegment, c_custkey,
-         |         sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS spend_cents
-         |  FROM customer JOIN orders ON c_custkey = o_custkey
-         |  WHERE o_orderdate >= TIMESTAMP '$y-01-01' AND o_orderdate < TIMESTAMP '${y + 1}-01-01'
-         |  GROUP BY 1, 2)
-         |SELECT c_mktsegment, c_custkey, spend_cents, CAST(rnk AS BIGINT) AS rnk FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY c_mktsegment
-         |    ORDER BY spend_cents DESC, c_custkey) AS rnk FROM cs)
-         |WHERE rnk <= $k ORDER BY 1, 4""".stripMargin
-    },
-    "point_lookup" -> { r =>
-      s"""SELECT o_orderkey, o_custkey, o_orderstatus,
-         |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-         |  date_format(o_orderdate, 'yyyy-MM-dd') AS order_date
-         |FROM orders WHERE o_orderkey = ${r.nextInt(1500)}""".stripMargin
-    },
-    "lineitem_range_agg" -> { r =>
-      val day = java.time.LocalDate.of(1995, 1, 2).plusDays(r.nextInt(1400))
-      val days = 30 + r.nextInt(61)
-      s"""SELECT l_returnflag, l_linestatus, count(*) AS n,
-         |  sum(CAST(l_quantity AS BIGINT)) AS qty,
-         |  sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS cents
-         |FROM lineitem
-         |WHERE l_shipdate >= TIMESTAMP '$day' AND l_shipdate < TIMESTAMP '$day' + INTERVAL $days DAYS
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-    "catalog_ledger" -> { r =>
-      s"""SELECT rg.r_name, n.n_name, u.run_id, m.metric,
-         |  CAST(round(m.value * 1000000) AS BIGINT) AS micro
-         |FROM nation n
-         |JOIN region rg ON n.n_regionkey = rg.r_regionkey
-         |CROSS JOIN pl_runs u
-         |JOIN pl_metrics m ON m.run_id = u.run_id
-         |WHERE n.n_nationkey = ${r.nextInt(25)}
-         |ORDER BY 3, 4""".stripMargin
-    })
-
   test("BI statements with new literals compile no class after one warm statement") {
-    Tables.registerViews(spark, sf)
-    spark.range(3).selectExpr("concat('run', id) AS run_id")
-      .createOrReplaceTempView("pl_runs")
-    spark.range(6).selectExpr("concat('run', id % 3) AS run_id",
-        "concat('m', id) AS metric", "id / 7.0D AS value")
-      .createOrReplaceTempView("pl_metrics")
+    BiTemplates.registerViews(spark, sf)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try {
       // each shape is warmed right before its run: Spark's compiled-class
@@ -192,17 +130,27 @@ class ParamLiteralSpec extends SparkSpec {
       // loader and one for the tasks', and in a JVM that has run other
       // suites the five shapes together can overflow it
       val r = new Random(9)
-      val compiles = templates.map { case (name, t) =>
+      val (compiles, oneTaskSorts) = BiTemplates.templates.map { case (name, t) =>
         spark.sql(t(r)).collect()
         val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-        for (_ <- 1 to 10) spark.sql(t(r)).collect()
-        name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
-      }
+        val sorted = (1 to 10).count { _ =>
+          val df = spark.sql(t(r)); df.collect()
+          BiTemplates.sortsInOnePartition(df)
+        }
+        (name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0),
+          name -> sorted)
+      }.unzip
       assert(compiles.forall(_._2 == 0L), s"classes compiled: $compiles")
+      // the zero covers the small-sort plan shape: the three templates
+      // that sort materialized stages sort them in one partition on every
+      // run (the lookup has no sort; the ledger's sort input reads files)
+      assert(oneTaskSorts == Seq("revenue_by_region" -> 10, "segment_topk" -> 10,
+        "point_lookup" -> 0, "lineitem_range_agg" -> 10, "catalog_ledger" -> 0),
+        oneTaskSorts)
 
       // the lookup plans no exchange, so no adaptive stage ran the rule;
       // its scan still pushes the Literal comparison down
-      val lookup = spark.sql(templates(2)._2(r)).queryExecution.executedPlan
+      val lookup = spark.sql(BiTemplates("point_lookup")(r)).queryExecution.executedPlan
       assert(params(lookup).nonEmpty, lookup.toString)
       val pushed = lookup.collect { case s: FileSourceScanExec =>
         s.metadata("PushedFilters") }

@@ -147,6 +147,19 @@ class ServeSpec extends SparkSpec {
     } finally conn.close()
   }
 
+  test("a JDBC session opens and closes in under 5 s with the ledger views") {
+    // Serve.start registered the ml_runs views (beforeAll's ledger); a BI
+    // tool that reconnects per dashboard refresh pays this round trip
+    val t0 = System.nanoTime()
+    val conn = connect()
+    try {
+      val rs = conn.createStatement().executeQuery("SELECT count(*) FROM ml_runs")
+      assert(rs.next() && rs.getLong(1) == 2)
+    } finally conn.close()
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 5, f"session open + query + close took $secs%.1f s")
+  }
+
   test("no temp-view leakage between JDBC sessions (multi-session mode)") {
     // without the singleSession static conf (Serve.main's opt-in for
     // shared temp views), each connection owns its session state: a temp

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -18,19 +15,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val sf: String = "/root/testdata/sf0.001"
 
   /** Spark jobs launched while `body` runs, counted by a listener. */
-  protected def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    ListenerDrain(sc) // earlier jobs must not reach the new listener
-    sc.addSparkListener(counter)
-    try { body; ListenerDrain(sc) } finally sc.removeSparkListener(counter)
-    jobs.get
-  }
+  protected def jobsDuring(body: => Unit): Int =
+    Inspect.jobsDuring(spark.sparkContext)(body)._2
 
   override def afterAll(): Unit = {
     // keep the session for the next suite (stop() would break sharing)

@@ -21,12 +21,7 @@ class StreamsSpec extends SparkSpec {
     // once across scheduler restarts at any scale.
     import org.apache.spark.sql.types.{LongType, StructType}
     val base = Paths.get(s"${Tables.scratchRoot}/restart_resume")
-    def wipe(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p))
-        Files.list(p).forEach(c => wipe(c))
-      Files.deleteIfExists(p); ()
-    }
-    wipe(base)
+    Tables.rmTree(base.toFile)
     val src = base.resolve("incoming"); Files.createDirectories(src)
     val ckpt = base.resolve("ckpt").toString
     val out = base.resolve("out").toString
@@ -66,12 +61,7 @@ class StreamsSpec extends SparkSpec {
     val srcDir = base.resolve("incoming")
     val archiveDir = base.resolve("processed")
     val ckpt = base.resolve("ckpt")
-    for (d <- Seq(srcDir, archiveDir, ckpt)) {
-      if (Files.exists(d)) {
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      }
-    }
+    for (d <- Seq(srcDir, archiveDir, ckpt)) Tables.rmTree(d.toFile)
     Files.createDirectories(srcDir)
     Files.copy(Paths.get(s"$sf/events.parquet"),
       srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -122,10 +112,7 @@ class StreamsSpec extends SparkSpec {
     // stateful count genuinely accumulates across batches (a single
     // AvailableNow batch would never exercise state reload/merge)
     val base = Paths.get(s"${Tables.scratchRoot}/multibatch")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base.toFile)
     val srcDir = base.resolve("src").toString
     val ckpt = base.resolve("ckpt").toString
     val events = Tables.load(spark, sf, "events")
@@ -280,10 +267,7 @@ class StreamsSpec extends SparkSpec {
 
   test("foreachBatch sink writes each micro-batch transactionally") {
     val base = Paths.get(s"${Tables.scratchRoot}/foreachbatch")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base.toFile)
     val out = base.resolve("out").toString
     val ckpt = base.resolve("ckpt").toString
 
@@ -444,10 +428,7 @@ class StreamsSpec extends SparkSpec {
       "the batch query's prefix-3 ranking exactly") {
     import org.apache.spark.sql.functions._
     val base = Paths.get(s"${Tables.scratchRoot}/dsir_incr")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base.toFile)
     // the 3 ingest batches as separate file drops (doc_id % 3 — the
     // same deterministic split the registered query uses)
     val docs = Tables.load(spark, sf, "documents")
@@ -604,10 +585,7 @@ class StreamsSpec extends SparkSpec {
       "file-source run maintaining manifest-committed band postings " +
       "reproduces the batch-decomposed ingest-time verdicts exactly") {
     val base = Paths.get(s"${Tables.scratchRoot}/phash_incr")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base.toFile)
     val (streamedDf, batches) =
       operators.Multimodal.phashIndexIngest(spark, sf, base.toString)
     assert(batches == 3,
@@ -629,10 +607,7 @@ class StreamsSpec extends SparkSpec {
     // scrambled processing order: direction must derive from the
     // persisted seq, pinned against the state-only recomputation
     val base2 = Paths.get(s"${Tables.scratchRoot}/phash_incr_scram")
-    if (Files.exists(base2)) {
-      Files.walk(base2).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base2.toFile)
     val (scrambledDf, _) = operators.Multimodal.phashIndexIngest(
       spark, sf, base2.toString, scrambleOrder = true)
     val firstOffset = new String(Files.readAllBytes(
@@ -687,10 +662,7 @@ class StreamsSpec extends SparkSpec {
 
     // hash-split drops: batch membership not derivable from the id
     val base3 = Paths.get(s"${Tables.scratchRoot}/phash_incr_hash")
-    if (Files.exists(base3)) {
-      Files.walk(base3).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base3.toFile)
     val (hashDf, _) = operators.Multimodal.phashIndexIngest(
       spark, sf, base3.toString, hashSplit = true)
     val hashRows = rows(hashDf)
@@ -709,10 +681,7 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     val root = s"${Tables.scratchRoot}/manifest_kill"
     val rootP = Paths.get(root)
-    if (Files.exists(rootP)) {
-      Files.walk(rootP).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(rootP.toFile)
     val M = operators.StateManifest
     M.append(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "b0")
     M.append(spark, root, Seq((3L, "c")).toDF("id", "v"), "b1")
@@ -751,12 +720,7 @@ class StreamsSpec extends SparkSpec {
       "untouched") {
     val baseAll = Paths.get(s"${Tables.scratchRoot}/minhash_ttl_all")
     val baseTtl = Paths.get(s"${Tables.scratchRoot}/minhash_ttl_1")
-    for (b <- Seq(baseAll, baseTtl)) {
-      if (Files.exists(b)) {
-        Files.walk(b).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      }
-    }
+    for (b <- Seq(baseAll, baseTtl)) Tables.rmTree(b.toFile)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) -1L else r.getLong(2), r.getBoolean(3))).toSeq
@@ -805,10 +769,7 @@ class StreamsSpec extends SparkSpec {
       "run maintaining band postings in parquet reproduces the " +
       "batch-decomposed ingest-time verdicts exactly") {
     val base = Paths.get(s"${Tables.scratchRoot}/minhash_incr")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base.toFile)
     val (streamedDf, batches) =
       operators.Dedup.minhashIndexIngest(spark, sf, base.toString)
     assert(batches == 3,
@@ -855,10 +816,7 @@ class StreamsSpec extends SparkSpec {
     // run must carry MORE state files (the small-files growth the
     // maintenance step exists to bound) and identical verdicts.
     val baseNc = Paths.get(s"${Tables.scratchRoot}/minhash_incr_nc")
-    if (Files.exists(baseNc)) {
-      Files.walk(baseNc).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(baseNc.toFile)
     val (ncDf, _) = operators.Dedup.minhashIndexIngest(
       spark, sf, baseNc.toString, compactEvery = 0)
     assert(rows(ncDf) == batchForm,
@@ -879,10 +837,7 @@ class StreamsSpec extends SparkSpec {
     // records THAT order, and the verdict table must equal the
     // batch-global recomputation from the persisted state alone
     val base2 = Paths.get(s"${Tables.scratchRoot}/minhash_incr_scram")
-    if (Files.exists(base2)) {
-      Files.walk(base2).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base2.toFile)
     val (scrambledDf, batches2) = operators.Dedup.minhashIndexIngest(
       spark, sf, base2.toString, scrambleOrder = true)
     assert(batches2 == 3)
@@ -901,10 +856,7 @@ class StreamsSpec extends SparkSpec {
     // state recomputation exactly, and some doc must land in a batch
     // different from doc_id % 3 (or the decoupling is vacuous)
     val base3 = Paths.get(s"${Tables.scratchRoot}/minhash_incr_hash")
-    if (Files.exists(base3)) {
-      Files.walk(base3).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base3.toFile)
     val (hashDf, _) = operators.Dedup.minhashIndexIngest(
       spark, sf, base3.toString, hashSplit = true)
     val hashRows = rows(hashDf)
@@ -920,10 +872,7 @@ class StreamsSpec extends SparkSpec {
       "maintaining (vec_id, cell, vec) postings in parquet reproduces " +
       "the batch-decomposed ingest-time verdicts exactly") {
     val base = Paths.get(s"${Tables.scratchRoot}/ivf_incr")
-    if (Files.exists(base)) {
-      Files.walk(base).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base.toFile)
     val (streamedDf, batches) =
       operators.Dedup.ivfIndexIngest(spark, sf, base.toString)
     assert(batches == 3,
@@ -947,10 +896,7 @@ class StreamsSpec extends SparkSpec {
     // maintenance: no-compaction control — identical verdicts, more
     // state files (see the minhash test for the full rationale)
     val baseNc = Paths.get(s"${Tables.scratchRoot}/ivf_incr_nc")
-    if (Files.exists(baseNc)) {
-      Files.walk(baseNc).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(baseNc.toFile)
     val (ncDf, _) = operators.Dedup.ivfIndexIngest(
       spark, sf, baseNc.toString, compactEvery = 0)
     assert(rows(ncDf) == batchForm,
@@ -968,10 +914,7 @@ class StreamsSpec extends SparkSpec {
     // recorded in the persisted seq, and the verdict table must equal
     // the batch-global recomputation from the persisted state alone
     val base2 = Paths.get(s"${Tables.scratchRoot}/ivf_incr_scram")
-    if (Files.exists(base2)) {
-      Files.walk(base2).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base2.toFile)
     val (scrambledDf, batches2) = operators.Dedup.ivfIndexIngest(
       spark, sf, base2.toString, scrambleOrder = true)
     assert(batches2 == 3)
@@ -985,10 +928,7 @@ class StreamsSpec extends SparkSpec {
 
     // batch membership NOT derivable from the id: hash-split drops
     val base3 = Paths.get(s"${Tables.scratchRoot}/ivf_incr_hash")
-    if (Files.exists(base3)) {
-      Files.walk(base3).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    Tables.rmTree(base3.toFile)
     val (hashDf, _) = operators.Dedup.ivfIndexIngest(
       spark, sf, base3.toString, hashSplit = true)
     val hashRows = rows(hashDf)
