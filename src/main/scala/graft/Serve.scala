@@ -27,11 +27,13 @@ object Serve {
     * smoke the wire protocol on an ephemeral port and stop the server.
     *
     * The hive.server2.thrift.port conf must be set on the session
-    * BEFORE calling (startWithContext snapshots the conf into its
-    * HiveConf). Temp-view visibility across JDBC connections requires
-    * the STATIC conf spark.sql.hive.thriftServer.singleSession=true
-    * (set at session build in main); without it each connection still
-    * sees every CATALOG table — the persistent-warehouse surface.
+    * BEFORE calling (startWithSparkSession snapshots the conf into its
+    * HiveConf). A failed start throws to the caller instead of exiting
+    * its JVM (`exitOnError = false`). Temp-view visibility across JDBC
+    * connections requires the STATIC conf
+    * spark.sql.hive.thriftServer.singleSession=true (set at session
+    * build in main); without it each connection still sees every
+    * CATALOG table — the persistent-warehouse surface.
     *
     * Returns the public HiveServer2 supertype (the concrete
     * HiveThriftServer2 class is private[hive]); stop() is what callers
@@ -45,7 +47,7 @@ object Serve {
     val runsRoot = operators.RunStore.defaultRoot(sfDir)
     if (new java.io.File(s"$runsRoot/runs").exists())
       operators.RunStore.registerViews(spark, runsRoot)
-    HiveThriftServer2.startWithContext(spark.sqlContext)
+    HiveThriftServer2.startWithSparkSession(spark, exitOnError = false)
   }
 
   def main(args: Array[String]): Unit = {

@@ -1081,21 +1081,7 @@ object Dedup extends QueryModule {
       "dedup_minhash_incremental",
       Some(s"""
         $minhashPairsCtesSql,
-        arr AS (SELECT doc_id,
-                       (doc_id % 3) * 1099511627776 + doc_id AS akey
-                FROM documents),
-        dirn AS (
-          SELECT CASE WHEN a.akey < b.akey THEN p.id_b ELSE p.id_a END
-                   AS doc,
-                 CASE WHEN a.akey < b.akey THEN p.id_a ELSE p.id_b END
-                   AS blocker,
-                 CASE WHEN a.akey < b.akey THEN a.akey ELSE b.akey END
-                   AS bakey
-          FROM pairs p
-          JOIN arr a ON a.doc_id = p.id_a
-          JOIN arr b ON b.doc_id = p.id_b),
-        v AS (SELECT doc, arg_min(blocker, bakey) AS near_dup_of
-              FROM dirn GROUP BY doc)
+        ${PostingsIngest.arrivalVerdictsSql("doc_id", "documents", "pairs")}
         SELECT d.doc_id, CAST(d.doc_id % 3 AS BIGINT) AS batch,
                CAST(v.near_dup_of AS BIGINT) AS near_dup_of,
                v.near_dup_of IS NULL AS is_novel
@@ -1128,21 +1114,7 @@ object Dedup extends QueryModule {
       "dedup_minhash_keepers_incremental",
       Some(s"""
         ${minhashPairsCtesSql.replaceFirst("WITH", "WITH RECURSIVE")},
-        arr AS (SELECT doc_id,
-                       (doc_id % 3) * 1099511627776 + doc_id AS akey
-                FROM documents),
-        dirn AS (
-          SELECT CASE WHEN a.akey < b.akey THEN p.id_b ELSE p.id_a END
-                   AS doc,
-                 CASE WHEN a.akey < b.akey THEN p.id_a ELSE p.id_b END
-                   AS blocker,
-                 CASE WHEN a.akey < b.akey THEN a.akey ELSE b.akey END
-                   AS bakey
-          FROM pairs p
-          JOIN arr a ON a.doc_id = p.id_a
-          JOIN arr b ON b.doc_id = p.id_b),
-        v AS (SELECT doc, arg_min(blocker, bakey) AS near_dup_of
-              FROM dirn GROUP BY doc),
+        ${PostingsIngest.arrivalVerdictsSql("doc_id", "documents", "pairs")},
         par AS (SELECT d.doc_id AS m,
                        coalesce(v.near_dup_of, d.doc_id) AS p
                 FROM documents d LEFT JOIN v ON v.doc = d.doc_id),
@@ -1307,21 +1279,7 @@ object Dedup extends QueryModule {
       Some(s"""
         WITH $semCellPairsCtesSql,
         pairs AS (SELECT id_a, id_b FROM p WHERE cos_sim >= 0.95),
-        arr AS (SELECT vec_id,
-                       (vec_id % 3) * 1099511627776 + vec_id AS akey
-                FROM allv),
-        dirn AS (
-          SELECT CASE WHEN a.akey < b.akey THEN pr.id_b ELSE pr.id_a END
-                   AS doc,
-                 CASE WHEN a.akey < b.akey THEN pr.id_a ELSE pr.id_b END
-                   AS blocker,
-                 CASE WHEN a.akey < b.akey THEN a.akey ELSE b.akey END
-                   AS bakey
-          FROM pairs pr
-          JOIN arr a ON a.vec_id = pr.id_a
-          JOIN arr b ON b.vec_id = pr.id_b),
-        v AS (SELECT doc, arg_min(blocker, bakey) AS near_dup_of
-              FROM dirn GROUP BY doc)
+        ${PostingsIngest.arrivalVerdictsSql("vec_id", "allv", "pairs")}
         SELECT al.vec_id, CAST(al.vec_id % 3 AS BIGINT) AS batch,
                CAST(v.near_dup_of AS BIGINT) AS near_dup_of,
                v.near_dup_of IS NULL AS is_novel

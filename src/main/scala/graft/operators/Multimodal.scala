@@ -212,7 +212,7 @@ object Multimodal extends QueryModule {
       : DataFrame = {
     val maxId = maxDocIdMemo.getOrElseUpdate(dir,
       Tables.load(s, dir, "documents")
-        .agg(max(col("doc_id"))).head.getLong(0))
+        .agg(max(col("doc_id"))).head().getLong(0))
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
       .take(12)
@@ -255,7 +255,7 @@ object Multimodal extends QueryModule {
     // immutable fixtures).
     val maxId = maxDocIdMemo.getOrElseUpdate(dir,
       Tables.load(s, dir, "documents")
-        .agg(max(col("doc_id"))).head.getLong(0))
+        .agg(max(col("doc_id"))).head().getLong(0))
     val plantOffset = {
       var o = 10000000L
       while (o <= maxId) o *= 10
@@ -662,21 +662,7 @@ object Multimodal extends QueryModule {
       "multimodal_phash_incremental",
       Some(s"""
         WITH $phashPairsCtesSql,
-        arr AS (SELECT doc_id AS media_id,
-                       (doc_id % 3) * 1099511627776 + doc_id AS akey
-                FROM ids),
-        dirn AS (
-          SELECT CASE WHEN a.akey < b.akey THEN p.id_b ELSE p.id_a END
-                   AS doc,
-                 CASE WHEN a.akey < b.akey THEN p.id_a ELSE p.id_b END
-                   AS blocker,
-                 CASE WHEN a.akey < b.akey THEN a.akey ELSE b.akey END
-                   AS bakey
-          FROM ppairs p
-          JOIN arr a ON a.media_id = p.id_a
-          JOIN arr b ON b.media_id = p.id_b),
-        v AS (SELECT doc, arg_min(blocker, bakey) AS near_dup_of
-              FROM dirn GROUP BY doc)
+        ${PostingsIngest.arrivalVerdictsSql("doc_id", "ids", "ppairs")}
         SELECT i.doc_id AS media_id, CAST(i.doc_id % 3 AS BIGINT) AS batch,
                CAST(v.near_dup_of AS BIGINT) AS near_dup_of,
                v.near_dup_of IS NULL AS is_novel
@@ -718,21 +704,7 @@ object Multimodal extends QueryModule {
       "multimodal_phash_keepers_incremental",
       Some(s"""
         WITH RECURSIVE $phashPairsCtesSql,
-        arr AS (SELECT doc_id AS media_id,
-                       (doc_id % 3) * 1099511627776 + doc_id AS akey
-                FROM ids),
-        dirn AS (
-          SELECT CASE WHEN a.akey < b.akey THEN p.id_b ELSE p.id_a END
-                   AS doc,
-                 CASE WHEN a.akey < b.akey THEN p.id_a ELSE p.id_b END
-                   AS blocker,
-                 CASE WHEN a.akey < b.akey THEN a.akey ELSE b.akey END
-                   AS bakey
-          FROM ppairs p
-          JOIN arr a ON a.media_id = p.id_a
-          JOIN arr b ON b.media_id = p.id_b),
-        v AS (SELECT doc, arg_min(blocker, bakey) AS near_dup_of
-              FROM dirn GROUP BY doc),
+        ${PostingsIngest.arrivalVerdictsSql("doc_id", "ids", "ppairs")},
         par AS (SELECT i.doc_id AS m,
                        coalesce(v.near_dup_of, i.doc_id) AS p
                 FROM ids i LEFT JOIN v ON v.doc = i.doc_id),

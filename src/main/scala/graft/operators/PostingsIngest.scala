@@ -88,6 +88,27 @@ private[graft] object PostingsIngest {
       "near_dup_of")
   }
 
+  /** DuckDB oracle text of [[arrivalVerdicts]]: the CTEs `arr` (every
+    * id of column `id` in `source`, with its arrival key), `dirn` (the
+    * pairs (id_a, id_b) of `pairs`, directed by that key) and `v` (doc,
+    * near_dup_of), to follow an oracle's own CTEs. */
+  def arrivalVerdictsSql(id: String, source: String, pairs: String)
+      : String = s"""
+        arr AS (SELECT $id AS id, ($id % 3) * ${1L << 40} + $id AS akey
+                FROM $source),
+        dirn AS (
+          SELECT CASE WHEN a.akey < b.akey THEN pa.id_b ELSE pa.id_a END
+                   AS doc,
+                 CASE WHEN a.akey < b.akey THEN pa.id_a ELSE pa.id_b END
+                   AS blocker,
+                 CASE WHEN a.akey < b.akey THEN a.akey ELSE b.akey END
+                   AS bakey
+          FROM $pairs pa
+          JOIN arr a ON a.id = pa.id_a
+          JOIN arr b ON b.id = pa.id_b),
+        v AS (SELECT doc, arg_min(blocker, bakey) AS near_dup_of
+              FROM dirn GROUP BY doc)"""
+
   /** Meetings of the batch's postings (`y`) against index ∪ batch (`x`,
     * carrying `in_index`) on `on`, kept by `check`: new-vs-index in
     * either id order (the index row is always the x side, seen once),
@@ -148,7 +169,6 @@ private[graft] object PostingsIngest {
       compactEvery: Int = CompactEvery, retainBatches: Int = 0)(
       postings: DataFrame => DataFrame)(
       pairs: (DataFrame, DataFrame) => DataFrame): (DataFrame, Int) = {
-    import org.apache.spark.sql.streaming.Trigger
     val idc = col(id)
     val split =
       if (hashSplit) pmod(xxhash64(idc), lit(3L)) else pmod(idc, lit(3L))
@@ -168,40 +188,39 @@ private[graft] object PostingsIngest {
     val postDir = s"$stateRoot/postings"
     val contribDir = s"$stateRoot/verdicts"
     val nBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = s.readStream.schema(arrivals.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stateRoot/in/*")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val frame = postings(batch).withColumn("seq", lit(batchId)).persist()
-        val idx = StateManifest.read(s, postDir).getOrElse(frame.limit(0))
-        val un = idx.withColumn("in_index", lit(true))
-          .unionByName(frame.withColumn("in_index", lit(false)))
-        // the doc's OWN ingest batch — the retention TTL's clock
-        val contribs =
-          directed(pairs(un, frame)).withColumn("dseq", lit(batchId))
-        // data files first, manifest last; the batch tag makes a
-        // foreachBatch replay after any crash point a no-op instead of a
-        // double-append
-        StateManifest.append(s, contribDir, contribs, s"b$batchId")
-        StateManifest.append(s, postDir, frame, s"b$batchId")
-        frame.unpersist()
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          compactStateDir(s, postDir)
-          retainContribs(s, contribDir, retainBatches, batchId)
-          // tag-horizon prune: every batch below the one executing is
-          // streaming-checkpoint-committed, so its tag can never be
-          // replayed — drop it from the manifest
-          StateManifest.pruneBatchTagsBelow(postDir, batchId)
-          StateManifest.pruneBatchTagsBelow(contribDir, batchId)
+    graft.streaming.LocalCheckpointFileManager.runAvailableNow(s,
+      s.readStream.schema(arrivals.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$stateRoot/in/*")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val frame =
+            postings(batch).withColumn("seq", lit(batchId)).persist()
+          val idx = StateManifest.read(s, postDir).getOrElse(frame.limit(0))
+          val un = idx.withColumn("in_index", lit(true))
+            .unionByName(frame.withColumn("in_index", lit(false)))
+          // the doc's OWN ingest batch — the retention TTL's clock
+          val contribs =
+            directed(pairs(un, frame)).withColumn("dseq", lit(batchId))
+          // data files first, manifest last; the batch tag makes a
+          // foreachBatch replay after any crash point a no-op instead of
+          // a double-append
+          StateManifest.append(s, contribDir, contribs, s"b$batchId")
+          StateManifest.append(s, postDir, frame, s"b$batchId")
+          frame.unpersist()
+          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+            compactStateDir(s, postDir)
+            retainContribs(s, contribDir, retainBatches, batchId)
+            // tag-horizon prune: every batch below the one executing is
+            // streaming-checkpoint-committed, so its tag can never be
+            // replayed — drop it from the manifest
+            StateManifest.pruneBatchTagsBelow(postDir, batchId)
+            StateManifest.pruneBatchTagsBelow(contribDir, batchId)
+          }
+          nBatches.incrementAndGet()
+          ()
         }
-        nBatches.incrementAndGet()
-        ()
-      }
-      .option("checkpointLocation", s"$stateRoot/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        .option("checkpointLocation", s"$stateRoot/ckpt"))
     val contrib = StateManifest.read(s, contribDir).getOrElse(
       s.range(0).select(col("id").as("doc"), col("id").as("blocker"),
         col("id").as("bakey")))

@@ -19,7 +19,8 @@ object Ingest {
       try {
         val df = spark.read.option("multiLine", "true").json(path)
         val realCols = df.columns.filterNot(_ == "_corrupt_record")
-        if (realCols.isEmpty) None else Some(df.select(realCols.map(df(_)): _*))
+        if (realCols.isEmpty) None
+        else Some(df.select(realCols.toIndexedSeq.map(df(_)): _*))
       } catch { case _: Throwable => None }
     json.getOrElse(
       spark.read.option("header", "true").csv(path))

@@ -34,7 +34,7 @@ object Roundtrip extends QueryModule {
   /** Write the two bucketBy(8, key) catalog tables once per (session,
     * sfDir); subsequent calls in the same session reuse them. */
   private def ensureBucketedTables(s: SparkSession, dir: String): Unit = {
-    val key = System.identityHashCode(s) + "|" +
+    val key = s"${System.identityHashCode(s)}|" +
       s.conf.get("spark.sql.warehouse.dir")
     if (bucketedReady.get(key) == dir &&
         s.catalog.tableExists("graft_li_bucketed") &&

@@ -201,7 +201,7 @@ object Snapshots {
     val touched = cur.filter(pred).select("bkt").distinct()
       .collect().map(_.getInt(0)).sorted // ≤ bucket count — metadata scale
     commitFiles(s, root, fromV, touched,
-      rewrite(cur.filter(col("bkt").isin(touched.map(Integer.valueOf): _*))))
+      rewrite(cur.filter(col("bkt").isInCollection(touched))))
   }
 
   /** Shared commit tail: write the rewritten buckets as data_v{N+1},
@@ -237,7 +237,7 @@ object Snapshots {
     val cur = readVersion(s, root, fromV)
       .withColumn("bkt", bucketOf(col(key)))
     val kept = cur
-      .filter(col("bkt").isin(touched.map(Integer.valueOf): _*))
+      .filter(col("bkt").isInCollection(touched))
       .join(src.select(col(key).as("__merge_key")),
         col(key) === col("__merge_key"), "left_anti")
     commitFiles(s, root, fromV, touched, kept.unionByName(src))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.{Q, QueryModule, Tables}
 
 /** Structured Streaming replacements for the reference's manual micro-batch
@@ -121,8 +120,9 @@ object Streams extends QueryModule {
   }
 
   /** Run a streaming DF to completion into a memory sink, return the table.
-    * Two session confs are pinned for the run and restored afterwards,
-    * both derived from the session and the query, never set by a user:
+    * Two session confs are pinned for the run beside the checkpoint
+    * manager ([[LocalCheckpointFileManager.runAvailableNow]]), both
+    * derived from the session and the query, never set by a user:
     *
     *  - State partitions: `min(8, defaultParallelism)`. Each state
     *    partition costs per-batch store commits (a stream-stream join
@@ -136,24 +136,19 @@ object Streams extends QueryModule {
     */
   private def materialize(s: SparkSession, df: DataFrame, name: String,
       mode: String): DataFrame = {
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = s.conf.get(partsKey)
-    val prevNoData = s.conf.get(noDataKey)
-    s.conf.set(partsKey, math.min(8, s.sparkContext.defaultParallelism).toString)
-    if (!needsFinalWatermarkBatch(df, mode)) s.conf.set(noDataKey, "false")
+    val pins = Seq("spark.sql.shuffle.partitions" ->
+        math.min(8, s.sparkContext.defaultParallelism).toString) ++
+      (if (needsFinalWatermarkBatch(df, mode)) Nil
+       else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
     try {
-      val query = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", freshCheckpoint(name))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      LocalCheckpointFileManager.runAvailableNow(s,
+        df.writeStream
+          .format("memory")
+          .queryName(name)
+          .outputMode(mode)
+          .option("checkpointLocation", freshCheckpoint(name)),
+        pins: _*)
     } finally {
-      s.conf.set(partsKey, prevParts)
-      s.conf.set(noDataKey, prevNoData)
       // Unload every state-store provider the finished run loaded (and
       // its 60s-interval maintenance thread): providers are cached per
       // (checkpoint, operator, partition) ACROSS queries, and a later
@@ -631,17 +626,14 @@ object Streams extends QueryModule {
         // AtomicInteger: the closure runs on the stream-execution thread;
         // the final read happens on the caller thread after termination
         val version = new java.util.concurrent.atomic.AtomicInteger(0)
-        val q = eventStream(s, dir)
+        LocalCheckpointFileManager.runAvailableNow(s, eventStream(s, dir)
           .select("user_id", "ts", "event_id", "event_type", "value")
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             version.set(upsertBatch(s, stateRoot, version.get, batch))
             ()
           }
-          .option("checkpointLocation", freshCheckpoint("fbu"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .option("checkpointLocation", freshCheckpoint("fbu")))
         s.read.parquet(s"$stateRoot/v${version.get}")
           .filter(col("event_type") =!= "error")
           .groupBy(col("event_type").as("last_op"))

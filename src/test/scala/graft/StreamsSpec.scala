@@ -13,47 +13,9 @@ class StreamsSpec extends SparkSpec {
 
   test("checkpointed restart: only new files process and dedup state" +
       " survives the stop/start boundary") {
-    // the reference's cross-run seen-ID contract (S4+Str2+Str3): a file
-    // consumed by run 1 must not re-process in run 2, and an ID deduped
-    // in run 1 must STAY deduped in run 2 — i.e. the file-source commit
-    // log and the state store both recover from the SAME checkpoint.
-    // This is the property that makes a daily AvailableNow job exactly-
-    // once across scheduler restarts at any scale.
-    import org.apache.spark.sql.types.{LongType, StructType}
-    val base = Paths.get(s"${Tables.scratchRoot}/restart_resume")
-    Tables.rmTree(base.toFile)
-    val src = base.resolve("incoming"); Files.createDirectories(src)
-    val ckpt = base.resolve("ckpt").toString
-    val out = base.resolve("out").toString
-    val schema = new StructType().add("user_id", LongType)
-    // parquet sink, not memory: the memory sink refuses checkpoint
-    // recovery by design (not fault-tolerant), and the file sink's own
-    // commit log makes the assertion end-to-end exactly-once
-    def runOnce(): Unit = {
-      val q = spark.readStream.schema(schema).json(src.toString)
-        .dropDuplicates("user_id")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    StreamsSpec.restartScenario(spark, "restart_resume") { w =>
+      w.trigger(Trigger.AvailableNow()).start().awaitTermination()
     }
-    Files.writeString(src.resolve("f1.json"),
-      (1L to 5L).map(i => s"""{"user_id":$i}""").mkString("\n"))
-    runOnce()
-    assert(spark.read.parquet(out).count() == 5)
-    // second batch overlaps the first on ids 4 and 5
-    Files.writeString(src.resolve("f2.json"),
-      (4L to 8L).map(i => s"""{"user_id":$i}""").mkString("\n"))
-    runOnce()
-    // exactly-once across the restart: f1 not re-emitted (source commit
-    // log), 4 and 5 suppressed by the RESTORED dedup state, 6-8 new —
-    // 8 rows total, no value twice
-    val got = spark.read.parquet(out).collect().map(_.getLong(0)).toSeq
-    assert(got.size == 8 && got.toSet == (1L to 8L).toSet,
-      s"restart produced $got, expected exactly 1..8 once each")
   }
 
   test("file source with cleanSource=archive moves consumed files (S12)") {
@@ -938,6 +900,56 @@ class StreamsSpec extends SparkSpec {
     assert(hashRows.exists(r => r._2 != r._1 % 3),
       "every hash-split vector landed in its vec_id%3 batch — the " +
         "membership decoupling is vacuous")
+  }
+}
+
+object StreamsSpec {
+  import org.scalatest.Assertions._
+
+  /** The reference's cross-run seen-ID contract (S4+Str2+Str3): a file
+    * consumed by run 1 must not re-process in run 2, and an ID deduped in
+    * run 1 must STAY deduped in run 2 — i.e. the file-source commit log
+    * and the state store both recover from the SAME checkpoint. This is
+    * the property that makes a daily AvailableNow job exactly-once across
+    * scheduler restarts at any scale. `run` starts the configured writer
+    * as an AvailableNow query and waits for it; the scenario lives under
+    * `<scratchRoot>/<name>` and returns its checkpoint directory. */
+  def restartScenario(spark: org.apache.spark.sql.SparkSession,
+      name: String)(
+      run: org.apache.spark.sql.streaming.DataStreamWriter[
+        org.apache.spark.sql.Row] => Unit): java.nio.file.Path = {
+    import org.apache.spark.sql.types.{LongType, StructType}
+    val base = Paths.get(s"${Tables.scratchRoot}/$name")
+    Tables.rmTree(base.toFile)
+    val src = base.resolve("incoming"); Files.createDirectories(src)
+    val ckpt = base.resolve("ckpt")
+    val out = base.resolve("out").toString
+    val schema = new StructType().add("user_id", LongType)
+    // parquet sink, not memory: the memory sink refuses checkpoint
+    // recovery by design (not fault-tolerant), and the file sink's own
+    // commit log makes the assertion end-to-end exactly-once
+    def runOnce(): Unit =
+      run(spark.readStream.schema(schema).json(src.toString)
+        .dropDuplicates("user_id")
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append"))
+    Files.writeString(src.resolve("f1.json"),
+      (1L to 5L).map(i => s"""{"user_id":$i}""").mkString("\n"))
+    runOnce()
+    assert(spark.read.parquet(out).count() == 5)
+    // second batch overlaps the first on ids 4 and 5
+    Files.writeString(src.resolve("f2.json"),
+      (4L to 8L).map(i => s"""{"user_id":$i}""").mkString("\n"))
+    runOnce()
+    // exactly-once across the restart: f1 not re-emitted (source commit
+    // log), 4 and 5 suppressed by the RESTORED dedup state, 6-8 new —
+    // 8 rows total, no value twice
+    val got = spark.read.parquet(out).collect().map(_.getLong(0)).toSeq
+    assert(got.size == 8 && got.toSet == (1L to 8L).toSet,
+      s"restart produced $got, expected exactly 1..8 once each")
+    ckpt
   }
 }
 
